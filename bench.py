@@ -15,6 +15,7 @@ from __future__ import annotations
 import json
 import math
 import os
+import platform
 import re
 import sys
 import time
@@ -177,6 +178,15 @@ SENTINEL_GATE = 1.15
 # points the ratio interpolates linearly in 1/cpus; below 4 cores it
 # extrapolates on the last segment's slope.
 _SENTINEL_CPU_RATIO_POINTS = [(32, 1.0), (16, 1.0), (8, 1.30), (4, 1.95)]
+# The host those points (and IDLE_SENTINEL_FLOOR) were measured on. Its
+# CPU architecture was not recorded; the ratios may not carry over to a
+# different architecture, so the detail artifact records it next to the
+# running host.
+_SENTINEL_CALIBRATION_HOST = {
+    "cpus": 32,
+    "arch": None,
+    "measured": "round 13, idle machine, min of 3 _sentinel_sample per core count",
+}
 
 
 def _sentinel_floor(cpus: int) -> float:
@@ -201,6 +211,20 @@ def _sentinel_floor(cpus: int) -> float:
 def _bench_cpus() -> int:
     env = os.environ.get("SPARK_GRAFT_CPUS")
     return int(env) if env else (os.cpu_count() or 8)
+
+
+def _sentinel_hosts() -> dict[str, dict]:
+    """The sentinel gate's calibration host beside this one."""
+    return {
+        "calibrated_on": _SENTINEL_CALIBRATION_HOST,
+        "this_host": {
+            "cpus": _bench_cpus(),
+            "os_cpus": os.cpu_count(),
+            "arch": platform.machine(),
+        },
+    }
+
+
 # Upfront gate: attempts and the pause between them, so a transient
 # burst (another build finishing) doesn't kill the whole run.
 _GATE_ATTEMPTS = 5
@@ -374,6 +398,7 @@ def main() -> None:
         detail = {
             "samples": {k: [round(s, 3) for s in v] for k, v in samples.items()},
             "sentinel_samples": [round(s, 3) for s in sentinel_samples],
+            "sentinel_hosts": _sentinel_hosts(),
             "errors": errors,
         }
         here = os.path.dirname(os.path.abspath(__file__))
@@ -415,6 +440,7 @@ def main() -> None:
     detail = {
         "samples": {k: [round(s, 3) for s in v] for k, v in samples.items()},
         "sentinel_samples": [round(s, 3) for s in sentinel_samples],
+        "sentinel_hosts": _sentinel_hosts(),
         "errors": errors,
         "vs_prev": vs_prev,
     }

@@ -13,6 +13,12 @@ from cosmos_xenna_spark.session import get_spark
 SF_SMOKE = os.environ.get("TEST_SF_DIR", "/root/testdata/sf0.001")
 
 
+def pytest_configure(config):
+    config.addinivalue_line(
+        "markers", "example(name): the examples/ script a test in test_examples.py runs"
+    )
+
+
 @pytest.fixture(scope="session")
 def spark():
     s = get_spark(app_name="cosmos_xenna_spark_tests", master="local[4]", shuffle_partitions=4)

@@ -4,12 +4,14 @@ simple_vlm_inference.py`` executes in its CI; ours must not rot).
 
 Each example owns its SparkSession lifecycle (get_spark + stop), so
 they run as subprocesses rather than inside the shared test session.
-All twelve subprocesses launch CONCURRENTLY from a module-scoped
-fixture (4 in flight, each on local[4] — 16 cores peak): run
-sequentially they cost ~6 minutes of almost pure session-startup
-serialization, a quarter of the whole suite's wall time (the r12
-driver pytest truncation, VERDICT r12 item 2). Each test still owns
-its own assertions and fails independently.
+An example runs only if a selected test asks for it (``@pytest.mark.
+example``), at most once per module. The selected ones launch
+CONCURRENTLY when the first of them is asked for (4 in flight, each on
+local[4] — 16 cores peak): run sequentially they cost ~6 minutes of
+almost pure session-startup serialization, a quarter of the whole
+suite's wall time (the r12 driver pytest truncation, VERDICT r12 item
+2). Each test still owns its own assertions and fails independently —
+a timeout included.
 """
 
 from __future__ import annotations
@@ -17,23 +19,18 @@ from __future__ import annotations
 import os
 import subprocess
 import sys
-import tempfile
-from concurrent.futures import ThreadPoolExecutor
+from concurrent.futures import Future, ThreadPoolExecutor
 
 import pytest
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 SF = os.environ.get("TEST_SF_DIR", "/root/testdata/sf0.001")
+TIMEOUT_S = 600
 
-_TMP = tempfile.mkdtemp(prefix="cxs_examples_")
-
+# ``{out}`` is a per-module scratch directory.
 _EXAMPLES: dict[str, list[str]] = {
     "dedup_and_search": ["examples/dedup_and_search.py", SF],
-    "vlm_caption_pipeline": [
-        "examples/vlm_caption_pipeline.py",
-        SF,
-        os.path.join(_TMP, "captions"),
-    ],
+    "vlm_caption_pipeline": ["examples/vlm_caption_pipeline.py", SF, "{out}/captions"],
     "curate_and_shard": ["examples/curate_and_shard.py", SF],
     "tokenize_and_train_prep": ["examples/tokenize_and_train_prep.py", SF],
     "quality_audit_and_fusion": ["examples/quality_audit_and_fusion.py", SF],
@@ -51,95 +48,130 @@ _EXAMPLES: dict[str, list[str]] = {
 
 
 def _run(args: list[str]) -> subprocess.CompletedProcess:
-    return subprocess.run(
-        [sys.executable, *args],
-        cwd=REPO,
-        capture_output=True,
-        text=True,
-        timeout=600,
-        env={**os.environ, "SPARK_GRAFT_CPUS": "4"},
-    )
+    cmd = [sys.executable, *args]
+    try:
+        return subprocess.run(
+            cmd,
+            cwd=REPO,
+            capture_output=True,
+            text=True,
+            timeout=TIMEOUT_S,
+            env={**os.environ, "SPARK_GRAFT_CPUS": "4"},
+        )
+    except subprocess.TimeoutExpired as e:
+        out, err = (
+            x.decode(errors="replace") if isinstance(x, bytes) else x or ""
+            for x in (e.stdout, e.stderr)
+        )
+        return subprocess.CompletedProcess(cmd, -1, out, f"{err}\ntimed out after {TIMEOUT_S} s")
+
+
+class _ExampleRuns:
+    """Memoised example subprocesses, started on first request."""
+
+    def __init__(self, pool: ThreadPoolExecutor, out_dir: str, wanted: list[str]):
+        self._pool, self._out_dir = pool, out_dir
+        self._wanted = wanted
+        self._runs: dict[str, Future] = {}
+
+    def _start(self, name: str) -> Future:
+        if name not in self._runs:
+            args = [a.format(out=self._out_dir) for a in _EXAMPLES[name]]
+            self._runs[name] = self._pool.submit(_run, args)
+        return self._runs[name]
+
+    def __getitem__(self, name: str) -> subprocess.CompletedProcess:
+        for other in self._wanted:  # the session's other examples, in parallel
+            self._start(other)
+        return self._start(name).result()
 
 
 @pytest.fixture(scope="module")
-def example_results() -> dict[str, subprocess.CompletedProcess]:
+def example_results(request, tmp_path_factory):
+    wanted = [
+        m.args[0] for item in request.session.items for m in item.iter_markers("example")
+    ]
     with ThreadPoolExecutor(max_workers=4) as pool:
-        futs = {name: pool.submit(_run, args) for name, args in _EXAMPLES.items()}
-        return {name: fut.result() for name, fut in futs.items()}
+        yield _ExampleRuns(pool, str(tmp_path_factory.mktemp("examples")), wanted)
 
 
-def test_dedup_and_search_example_runs(example_results):
-    p = example_results["dedup_and_search"]
-    assert p.returncode == 0, p.stderr[-2000:]
-    assert "documents:" in p.stdout and "sample neighbors:" in p.stdout
+@pytest.fixture
+def example(request, example_results) -> subprocess.CompletedProcess:
+    return example_results[request.node.get_closest_marker("example").args[0]]
 
 
-def test_vlm_caption_pipeline_example_runs(example_results):
-    p = example_results["vlm_caption_pipeline"]
-    assert p.returncode == 0, p.stderr[-2000:]
-    assert "captioned" in p.stdout
+@pytest.mark.example("dedup_and_search")
+def test_dedup_and_search_example_runs(example):
+    assert example.returncode == 0, example.stderr[-2000:]
+    assert "documents:" in example.stdout and "sample neighbors:" in example.stdout
 
 
-def test_curate_and_shard_example_runs(example_results):
-    p = example_results["curate_and_shard"]
-    assert p.returncode == 0, p.stderr[-2000:]
-    assert "DQ report:" in p.stdout and "shards, sizes" in p.stdout
+@pytest.mark.example("vlm_caption_pipeline")
+def test_vlm_caption_pipeline_example_runs(example):
+    assert example.returncode == 0, example.stderr[-2000:]
+    assert "captioned" in example.stdout
 
 
-def test_tokenize_and_train_prep_example_runs(example_results):
-    r = example_results["tokenize_and_train_prep"]
-    assert r.returncode == 0, r.stderr[-2000:]
-    assert "learned" in r.stdout and "training sequences" in r.stdout
+@pytest.mark.example("curate_and_shard")
+def test_curate_and_shard_example_runs(example):
+    assert example.returncode == 0, example.stderr[-2000:]
+    assert "DQ report:" in example.stdout and "shards, sizes" in example.stdout
 
 
-def test_quality_audit_and_fusion_example_runs(example_results):
-    r = example_results["quality_audit_and_fusion"]
-    assert r.returncode == 0, r.stderr[-2000:]
-    assert "hybrid top-" in r.stdout
+@pytest.mark.example("tokenize_and_train_prep")
+def test_tokenize_and_train_prep_example_runs(example):
+    assert example.returncode == 0, example.stderr[-2000:]
+    assert "learned" in example.stdout and "training sequences" in example.stdout
 
 
-def test_streaming_analytics_example_runs(example_results):
-    r = example_results["streaming_analytics"]
-    assert r.returncode == 0, r.stderr[-2000:]
-    assert "live OHLC bars" in r.stdout and "attributed" in r.stdout
+@pytest.mark.example("quality_audit_and_fusion")
+def test_quality_audit_and_fusion_example_runs(example):
+    assert example.returncode == 0, example.stderr[-2000:]
+    assert "hybrid top-" in example.stdout
 
 
-def test_web_curation_pipeline_runs(example_results):
-    r = example_results["web_curation_pipeline"]
-    assert r.returncode == 0, r.stdout[-2000:] + r.stderr[-2000:]
-    assert "clusters straddling splits: 0" in r.stdout
-    assert "OK" in r.stdout
+@pytest.mark.example("streaming_analytics")
+def test_streaming_analytics_example_runs(example):
+    assert example.returncode == 0, example.stderr[-2000:]
+    assert "live OHLC bars" in example.stdout and "attributed" in example.stdout
 
 
-def test_graph_analytics_pipeline_runs(example_results):
-    r = example_results["graph_analytics_pipeline"]
-    assert r.returncode == 0, r.stdout[-2000:] + r.stderr[-2000:]
-    assert "trade loops:" in r.stdout
-    assert "modularity" in r.stdout
-    assert "OK" in r.stdout
+@pytest.mark.example("web_curation_pipeline")
+def test_web_curation_pipeline_runs(example):
+    assert example.returncode == 0, example.stdout[-2000:] + example.stderr[-2000:]
+    assert "clusters straddling splits: 0" in example.stdout
+    assert "OK" in example.stdout
 
 
-def test_data_selection_pipeline_example_runs(example_results):
-    p = example_results["data_selection_pipeline"]
-    assert p.returncode == 0, p.stderr[-2000:]
-    assert "mixture plan" in p.stdout and "after surprisal tail cut" in p.stdout
+@pytest.mark.example("graph_analytics_pipeline")
+def test_graph_analytics_pipeline_runs(example):
+    assert example.returncode == 0, example.stdout[-2000:] + example.stderr[-2000:]
+    assert "trade loops:" in example.stdout
+    assert "modularity" in example.stdout
+    assert "OK" in example.stdout
 
 
-def test_video_curation_pipeline_example_runs(example_results):
-    p = example_results["video_curation_pipeline"]
-    assert p.returncode == 0, p.stderr[-2000:]
-    assert "after IoU dedup" in p.stdout and "resolution buckets" in p.stdout
-    assert "GPS-clean" in p.stdout and "shards" in p.stdout
+@pytest.mark.example("data_selection_pipeline")
+def test_data_selection_pipeline_example_runs(example):
+    assert example.returncode == 0, example.stderr[-2000:]
+    assert "mixture plan" in example.stdout and "after surprisal tail cut" in example.stdout
 
 
-def test_continuous_serving_pipeline_example_runs(example_results):
-    p = example_results["continuous_serving_pipeline"]
-    assert p.returncode == 0, p.stderr[-2000:]
-    assert "continuous serving done: 600 requests scored" in p.stdout
+@pytest.mark.example("video_curation_pipeline")
+def test_video_curation_pipeline_example_runs(example):
+    assert example.returncode == 0, example.stderr[-2000:]
+    assert "after IoU dedup" in example.stdout and "resolution buckets" in example.stdout
+    assert "GPS-clean" in example.stdout and "shards" in example.stdout
 
 
-def test_experiment_analysis_pipeline_example_runs(example_results):
-    p = example_results["experiment_analysis_pipeline"]
-    assert p.returncode == 0, p.stderr[-2000:]
-    assert "experiment analysis done over" in p.stdout
-    assert "SRM: split" in p.stdout and "Qini final:" in p.stdout
+@pytest.mark.example("continuous_serving_pipeline")
+def test_continuous_serving_pipeline_example_runs(example):
+    assert example.returncode == 0, example.stderr[-2000:]
+    assert "continuous serving done: 600 requests scored" in example.stdout
+
+
+@pytest.mark.example("experiment_analysis_pipeline")
+def test_experiment_analysis_pipeline_example_runs(example):
+    assert example.returncode == 0, example.stderr[-2000:]
+    assert "experiment analysis done over" in example.stdout
+    assert "SRM: split" in example.stdout and "Qini final:" in example.stdout

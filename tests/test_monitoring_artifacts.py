@@ -162,3 +162,17 @@ def test_metrics_audit_artifact_is_fresh():
         f"METRICS.json stale: missing={sorted(missing)} extra={sorted(extra)}"
         " — run `python scripts/metrics_audit.py` in the same commit"
     )
+
+
+def test_bench_detail_names_sentinel_calibration_host():
+    """The sentinel gate's ratios come from one host; the bench detail
+    records it next to the running host so a run on another core count
+    or architecture can be read against it."""
+    import platform
+
+    import bench
+
+    hosts = bench._sentinel_hosts()
+    assert hosts["calibrated_on"]["cpus"] == max(c for c, _ in bench._SENTINEL_CPU_RATIO_POINTS)
+    assert hosts["this_host"]["arch"] == platform.machine()
+    assert hosts["this_host"]["cpus"] == bench._bench_cpus()
