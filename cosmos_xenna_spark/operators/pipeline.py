@@ -8,11 +8,13 @@ specs.py:521-539``; modes ``:49-67``). Here:
   narrow stages and spills shuffles, so the reference's "intermediate
   data fully materialized in object store" OOM caveat
   (reference README.md:50) disappears.
-- STREAMING mode -> the same stage chain applied inside Structured
-  Streaming (see ``cosmos_xenna_spark.streaming``); Spark already
-  executes all stages concurrently with backpressure, which is what the
-  reference's streaming executor + autoscaler machinery
-  (``streaming.py:871-944``) exists to do.
+- STREAMING mode -> the same fused stage chain (``run_pipeline``)
+  applied to a streaming DataFrame (see ``cosmos_xenna_spark.streaming``),
+  so a micro-batch crosses the JVM/Python boundary once per group of
+  same-shape stages, as a batch does; Spark already executes all stages
+  concurrently with backpressure, which is what the reference's
+  streaming executor + autoscaler machinery (``streaming.py:871-944``)
+  exists to do.
 - The reference's executor internals — actor pools, work stealing,
   backpressure accounting, autoscaling (``actor_pool.py``,
   ``streaming.py:286-654``) — are deliberately NOT ported: the Spark
@@ -30,7 +32,11 @@ from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-from cosmos_xenna_spark.operators.stage import Stage, apply_stage
+from cosmos_xenna_spark.operators.stage import (
+    Stage,
+    _profile_for,
+    make_map_in_pandas_fn,
+)
 
 
 @dataclass
@@ -71,30 +77,21 @@ class PipelineSpec:
             s.validate()
 
 
-def run_pipeline(input_df: DataFrame, spec: PipelineSpec, fuse: bool = True) -> DataFrame:
+def run_pipeline(input_df: DataFrame, spec: PipelineSpec) -> DataFrame:
     """Compose the stage chain over a DataFrame (lazy — the caller picks
     the action/sink, matching ``return_last_stage_outputs`` semantics:
     write it, collect it, or feed it onward).
 
-    ``fuse=True`` (default) merges ADJACENT stages with identical
-    resource shapes into one ``mapInPandas`` call: the stage UDF bodies
-    are iterator->iterator functions, so they compose Python-side, and
-    every fused boundary saves a full Arrow JVM<->Python round trip
-    (serialize + IPC + deserialize per batch — the dominant cost of a
-    chained Python pipeline). Stages with different resources stay
-    separate so each keeps its own ResourceProfile.
+    ADJACENT stages with identical resource shapes merge into one
+    ``mapInPandas`` call: the stage UDF bodies are iterator->iterator
+    functions, so they compose Python-side, and every fused boundary
+    saves a full Arrow JVM<->Python round trip (serialize + IPC +
+    deserialize per batch — the dominant cost of a chained Python
+    pipeline). Stages with different resources stay separate so each
+    keeps its own ResourceProfile. Batch and streaming DataFrames take
+    the same path.
     """
     spec.validate()
-    if not fuse:
-        df = input_df
-        for s in spec.stages:
-            df = apply_stage(df, s.stage_factory, s.output_schema)
-        return df
-
-    from cosmos_xenna_spark.operators.stage import (
-        _profile_for,
-        make_map_in_pandas_fn,
-    )
 
     groups: list[list[StageSpec]] = []
     for s in spec.stages:

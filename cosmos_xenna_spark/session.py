@@ -76,17 +76,21 @@ def get_spark(
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         # Scan-parallelism FLOOR (guide: spark.sql.files.minPartitionNum
-        # sets a floor on scan parallelism): a single small parquet file
-        # otherwise becomes ONE input split (maxPartitionBytes=128MB)
-        # and every scan-rooted aggregation runs on one core while the
-        # rest idle.  The floor is scale-adaptive by construction — a
-        # 100 TB scan already has orders of magnitude more splits than
-        # cores, so the conf is a no-op there; locally it splits the
-        # file down to ~bytes/cores.  openCostInBytes drops from its
-        # HDD-era 4MB default so the floor can actually bite on
-        # sub-4MB files (it only weights small-file packing; large-file
-        # splitting at scale is governed by maxPartitionBytes).  Both
-        # env-overridable for cluster profiles.
+        # sets a floor on scan parallelism): it cuts a file into ~cores
+        # byte-range splits instead of ONE (maxPartitionBytes=128MB).
+        # The splits only carry rows when the file has several row
+        # groups: parquet cannot be read from inside a row group, so a
+        # split gets the row groups whose midpoint it holds.  Every
+        # local test and bench table (sf0.001-sf0.1) is one file with
+        # one row group, so there the floor yields ~cores scan
+        # partitions of which one holds all rows (sf0.1 lineitem on 4
+        # cores: [0, 600000, 0, 0]) and scan-rooted work still starts on
+        # one core.  At scale a scan already has far more splits than
+        # cores and the conf is a no-op.  openCostInBytes drops from its
+        # HDD-era 4MB default so the floor can bite on sub-4MB files (it
+        # only weights small-file packing; large-file splitting at scale
+        # is governed by maxPartitionBytes).  Both env-overridable for
+        # cluster profiles.
         .config(
             "spark.sql.files.minPartitionNum",
             os.environ.get("SPARK_GRAFT_MIN_PARTITION_NUM", str(shuffle_partitions)),

@@ -39,8 +39,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from cosmos_xenna_spark.catalog import normalize_ts
-from cosmos_xenna_spark.operators.pipeline import PipelineSpec
-from cosmos_xenna_spark.operators.stage import apply_stage
+from cosmos_xenna_spark.operators.pipeline import PipelineSpec, run_pipeline
 
 EVENTS_DDL = (
     "event_id long, ts timestamp, user_id long, event_type string, "
@@ -81,13 +80,11 @@ def events_file_stream(
 
 
 def run_stages_streaming(stream_df: DataFrame, spec: PipelineSpec) -> DataFrame:
-    """Reference STREAMING mode: the same Stage chain over a streaming
-    DataFrame — Spark runs every stage concurrently per micro-batch."""
-    spec.validate()
-    df = stream_df
-    for s in spec.stages:
-        df = apply_stage(df, s.stage_factory, s.output_schema)
-    return df
+    """Reference STREAMING mode: the batch stage chain over a streaming
+    DataFrame. Adjacent stages with the same resource shape run as one
+    ``mapInPandas``, so a micro-batch crosses the JVM/Python boundary
+    once per shape group, as in batch mode."""
+    return run_pipeline(stream_df, spec)
 
 
 def tumbling_counts(stream_df: DataFrame, window: str = "5 minutes", watermark: str = "30 minutes") -> DataFrame:

@@ -6,8 +6,10 @@ specs.py:511-518``, poll loop ``streaming.py:992-1004``). Spark 4's
 Python DataSource API makes the same architecture expressible
 natively: a ``multiprocessing.managers`` queue server owns named
 queues in the user's process; the streaming reader (which Spark runs
-in a separate Python worker process) connects by address and drains
-the queue per micro-batch.
+in a separate Python worker process) connects by address once and
+pays one manager call per micro-batch: a per-queue drainer runs the
+get loop inside the manager process and returns the whole batch in
+one reply, so the fixed cost of a read does not grow with its rows.
 
 Usage::
 
@@ -25,13 +27,14 @@ Usage::
     # server.sentinel_seen("requests") and stop the query.
 
 The reader keeps only (host, port, keyfile-path, name) strings —
-picklable by construction; the connection is opened lazily inside the
-worker. The authkey is generated per-server (os.urandom) and written
-to a mode-0600 key file whose PATH (never the key itself) travels
-through options(): reader options are embedded in the logical plan and
-surface in ``explain()``, the Spark UI and event logs, so a literal
-key in options would leak to anything that can read plans. Co-tenant
-processes can see the path but not read the file.
+picklable by construction; the connection and the drainer proxy are
+opened lazily inside the worker, once per reader. The authkey is
+generated per-server (os.urandom) and written to a mode-0600 key file
+whose PATH (never the key itself) travels through options(): reader
+options are embedded in the logical plan and surface in ``explain()``,
+the Spark UI and event logs, so a literal key in options would leak to
+anything that can read plans. Co-tenant processes can see the path but
+not read the file.
 """
 
 from __future__ import annotations
@@ -56,17 +59,44 @@ def _get_queue(name: str):
     return _SERVER_QUEUES.setdefault(name, _q.Queue())
 
 
-def _set_flag(name: str):
-    _SERVER_FLAGS[name] = True
-
-
 def _get_flag(name: str) -> bool:
     return _SERVER_FLAGS.get(name, False)
 
 
+class _Drainer:
+    """Server-side reader of one named queue. ``drain`` runs in the
+    manager process, so the streaming reader pays one round trip per
+    micro-batch, whatever its row count."""
+
+    def __init__(self, name: str):
+        self.name = name
+        self.queue = _get_queue(name)
+
+    def drain(self, max_rows: int) -> list[tuple]:
+        rows: list[tuple] = []
+        while len(rows) < max_rows:
+            try:
+                item = self.queue.get_nowait()
+            except _q.Empty:
+                break
+            if item is None:  # reference termination sentinel
+                _SERVER_FLAGS[self.name] = True
+                break
+            if isinstance(item, list):
+                # chunked push: one client put delivers many rows, so
+                # the push side pays one manager call per chunk, as the
+                # reader pays one per micro-batch. A chunk may overshoot
+                # max_rows; the cap is a batch-size hint, not a hard
+                # limit.
+                rows.extend(tuple(r) for r in item)
+            else:
+                rows.append(tuple(item))
+        return rows
+
+
 _QueueManager.register("get_queue", callable=_get_queue)
-_QueueManager.register("set_flag", callable=_set_flag)
 _QueueManager.register("get_flag", callable=_get_flag)
+_QueueManager.register("get_drainer", callable=_Drainer, exposed=("drain",))
 
 
 class ServingQueueServer:
@@ -124,42 +154,17 @@ class _ServingReader(SimpleDataSourceStreamReader):
         with open(options["authkey_file"]) as f:
             self.authkey = bytes.fromhex(f.read().strip())
         self.max_rows = int(options.get("maxrowsperbatch", "10000"))
-        self._mgr = None
-
-    def _connect(self):
-        if self._mgr is None:
-            self._mgr = _QueueManager(
-                address=(self.host, self.port), authkey=self.authkey
-            )
-            self._mgr.connect()
-        return self._mgr
+        self._drainer = None
 
     def initialOffset(self) -> dict:
         return {"n": 0}
 
     def read(self, start: dict):
-        mgr = self._connect()
-        q = mgr.get_queue(self.qname)
-        rows = []
-        while len(rows) < self.max_rows:
-            try:
-                item = q.get_nowait()
-            except _q.Empty:
-                break
-            if item is None:  # reference termination sentinel
-                mgr.set_flag(self.qname)
-                break
-            if isinstance(item, list):
-                # chunked push: one manager RPC delivers many rows —
-                # every q.get is a network round-trip through the
-                # manager proxy, so per-row gets cap the source at a
-                # few kRows/s regardless of downstream speed (measured
-                # 10x with 1k-row chunks). A chunk may overshoot
-                # max_rows slightly; the cap is a batch-size hint, not
-                # a hard limit.
-                rows.extend(tuple(r) for r in item)
-            else:
-                rows.append(tuple(item))
+        if self._drainer is None:
+            mgr = _QueueManager(address=(self.host, self.port), authkey=self.authkey)
+            mgr.connect()
+            self._drainer = mgr.get_drainer(self.qname)
+        rows = self._drainer.drain(self.max_rows)
         return iter(rows), {"n": start["n"] + len(rows)}
 
 

@@ -520,7 +520,8 @@ def main() -> None:
 
     results["serving_round_trip"] = serving_round_trip(spark)
     # throughput regime: one wave + CHUNKED pushes (1k rows per queue
-    # item = one manager RPC per 1k rows instead of per row) — the
+    # item = one push-side manager call per 1k rows instead of per
+    # row; the reader pays one call per micro-batch either way) — the
     # serving path's rows/s ceiling. The 5-wave per-row variant above
     # is the latency-regime number (true A2 parity: one push per
     # request, cycle time dominated by micro-batch planning).

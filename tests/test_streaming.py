@@ -79,6 +79,10 @@ def test_streaming_dedup_keeps_unique_ids(spark, sf_dir, events_dir):
 
 
 def test_stage_chain_runs_on_stream(spark, events_dir, sf_dir):
+    """Two same-shape stages over a stream fuse into one Python
+    evaluation per micro-batch, as in batch mode."""
+    from cosmos_xenna_spark.plans import plan_nodes
+
     class ValueScaler(Stage):
         def setup(self):
             self.scale = 2.0
@@ -88,13 +92,27 @@ def test_stage_chain_runs_on_stream(spark, events_dir, sf_dir):
                 {"event_id": pdf["event_id"], "v2": pdf["value"] * self.scale}
             )
 
-    spec = PipelineSpec(stages=[StageSpec(ValueScaler, "event_id long, v2 double")])
+    class AddOne(Stage):
+        def process_data(self, pdf: pd.DataFrame) -> pd.DataFrame:
+            return pdf.assign(v2=pdf["v2"] + 1.0)
+
+    spec = PipelineSpec(
+        stages=[
+            StageSpec(ValueScaler, "event_id long, v2 double"),
+            StageSpec(AddOne, "event_id long, v2 double"),
+        ]
+    )
     stream = events_file_stream(spark, events_dir)
-    q = to_memory_sink(run_stages_streaming(stream, spec), "t_staged", "append")
+    staged = run_stages_streaming(stream, spec)
+    nodes = plan_nodes(staged)
+    assert nodes.count("MapInPandas") == 1, nodes
+    q = to_memory_sink(staged, "t_staged", "append")
     _drain(q)
     got = spark.sql("SELECT count(*) AS n, sum(v2) AS s FROM t_staged").collect()[0]
     ev = load_table(spark, sf_dir, "events")
-    want = ev.select(F.count(F.lit(1)).alias("n"), (F.sum("value") * 2).alias("s")).collect()[0]
+    want = ev.select(
+        F.count(F.lit(1)).alias("n"), (F.sum("value") * 2 + F.count(F.lit(1))).alias("s")
+    ).collect()[0]
     assert got.n == want.n
     assert abs(got.s - want.s) < 1e-6
 
@@ -553,9 +571,10 @@ def test_streaming_attribution_matches_batch(spark, sf_dir, events_dir):
 
 
 def test_serving_queue_source_chunked_push(spark):
-    """Chunked pushes (list-valued queue items) deliver all rows in one
-    manager RPC and interleave freely with per-row pushes and the
-    None sentinel."""
+    """Chunked pushes (list-valued queue items) deliver many rows per
+    client put and interleave freely with per-row pushes and the None
+    sentinel; the stream drains them with one manager call per
+    micro-batch."""
     import time as _time
 
     from cosmos_xenna_spark.streaming.serving_source import (
@@ -595,6 +614,70 @@ def test_serving_queue_source_chunked_push(spark):
             handle.stop()
             handle.awaitTermination(30)
             spark.streams.resetTerminated()
+    finally:
+        server.shutdown()
+
+
+def test_serving_reader_one_manager_call_per_read(monkeypatch):
+    """``_ServingReader.read`` against a live queue server, without
+    Spark: one drainer proxy per reader and one manager call per read,
+    with push order, the None sentinel and the row cap unchanged."""
+    from cosmos_xenna_spark.streaming.serving_source import (
+        ServingQueueServer,
+        _QueueManager,
+        _ServingReader,
+    )
+
+    proxies, calls = [], []
+    real_get_drainer = _QueueManager.get_drainer
+
+    def counting_get_drainer(self, *args, **kwargs):
+        proxy = real_get_drainer(self, *args, **kwargs)
+        real_call = proxy._callmethod
+
+        def counting_call(method, *a, **k):
+            calls.append(method)
+            return real_call(method, *a, **k)
+
+        proxy._callmethod = counting_call
+        proxies.append(proxy)
+        return proxy
+
+    monkeypatch.setattr(_QueueManager, "get_drainer", counting_get_drainer)
+
+    def read(reader, start):
+        rows, end = reader.read(start)
+        return list(rows), end
+
+    server = ServingQueueServer()
+    try:
+        q = server.queue("rd")
+        reader = _ServingReader(server.options("rd"))
+        assert read(reader, {"n": 0}) == ([], {"n": 0})
+
+        q.put((1, "a"))
+        q.put([(2, "b"), (3, "c")])
+        q.put((4, "d"))
+        assert read(reader, {"n": 0}) == (
+            [(1, "a"), (2, "b"), (3, "c"), (4, "d")], {"n": 4}
+        )
+
+        q.put((5, "e"))
+        q.put(None)
+        q.put((6, "f"))
+        assert read(reader, {"n": 4}) == ([(5, "e")], {"n": 5})
+        assert server.sentinel_seen("rd")
+        assert read(reader, {"n": 5}) == ([(6, "f")], {"n": 6})
+        assert (len(proxies), calls) == (1, ["drain"] * 4)
+
+        capped = _ServingReader({**server.options("rd"), "maxrowsperbatch": "3"})
+        for i in range(5):
+            q.put((10 + i, "s"))
+        assert read(capped, {"n": 0}) == ([(10 + i, "s") for i in range(3)], {"n": 3})
+        assert read(capped, {"n": 3}) == ([(13, "s"), (14, "s")], {"n": 5})
+        q.put([(20 + i, "c") for i in range(5)])  # a chunk may overshoot the cap
+        assert read(capped, {"n": 5})[1] == {"n": 10}
+        assert (len(proxies), calls) == (2, ["drain"] * 7)
     finally:
         server.shutdown()
 
