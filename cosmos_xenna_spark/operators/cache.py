@@ -11,8 +11,8 @@ after the Jaccard family (which persisted its word sets and never
 released them) measured 3-5x slower than the same query in a fresh
 session, purely from accumulated dead cache blocks.
 
-Two tools, both tied to the natural lifetime boundary — the result
-DataFrame handed back to the caller:
+Three tools. The first two are tied to the natural lifetime boundary —
+the result DataFrame handed back to the caller:
 
 - :func:`scoped_persist` persists a scratch frame and unpersists it
   when the *result* DataFrame is garbage-collected. The cache lives
@@ -41,8 +41,10 @@ falling back to Spark's own GC-driven cleanup.
 from __future__ import annotations
 
 import weakref
+from typing import Callable
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
+from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 
@@ -113,3 +115,45 @@ def release_local_checkpoint(df: DataFrame) -> None:
             rdd.unpersist(False)
         except Exception:  # noqa: BLE001
             pass
+
+
+def fixpoint(
+    state: DataFrame,
+    step: Callable[[DataFrame], DataFrame],
+    n_steps: int,
+    *,
+    monotone: bool,
+) -> DataFrame:
+    """Apply ``step`` ``n_steps`` times, checkpointing before each step.
+
+    Each step's input is an eager ``localCheckpoint``, so the plan stays
+    linear in ``n_steps``. Each new checkpoint releases the one it
+    supersedes; the final one is left to the ContextCleaner. After
+    ``n_steps`` steps the last step's frame is returned lazily.
+
+    ``monotone=True`` stops at the first checkpoint whose row count
+    repeats the previous one and returns that checkpoint. This is only
+    sound when ``step`` never both adds and removes rows (a grow-only or
+    shrink-only state): then an equal count is an equal set, and every
+    remaining step would recompute it unchanged. The count is an
+    ``observe`` on the checkpoint's own job, and each step gets a fresh
+    unnamed ``Observation`` so loops on concurrent driver threads never
+    share one.
+    """
+    prev: DataFrame | None = None
+    prev_n = -1
+    for _ in range(n_steps):
+        if monotone:
+            seen = Observation()
+            state = state.observe(seen, F.count(F.lit(1)).alias("n"))
+        state = state.localCheckpoint(eager=True)
+        if prev is not None:
+            release_local_checkpoint(prev)
+        prev = state
+        if monotone:
+            n = seen.get["n"]
+            if n == prev_n:
+                break
+            prev_n = n
+        state = step(state)
+    return state

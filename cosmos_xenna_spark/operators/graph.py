@@ -1,8 +1,21 @@
-"""Iterative graph analytics: fixed-point PageRank.
+"""Iterative graph analytics on edge-list DataFrames.
 
-Complements :func:`operators.dedup.connected_components` (the engine's
-other iterative-join algorithm) with a weighted-importance ranking
-usable for, e.g., domain-authority weighting of a web corpus.
+Ranking: fixed-point PageRank (plain, weighted, personalized) and HITS.
+Structure: triangle counts, clustering coefficient, modularity, degree
+assortativity, label propagation, k-core and k-truss peeling, and
+k-bounded strongly connected components. Distances: BFS hops, weighted
+shortest paths, DAG layering, and probe-panel eccentricity and harmonic
+centrality. Link prediction: resource allocation and Jaccard. Every
+kernel has a ``*_sql`` DuckDB mirror that unrolls the same iterations.
+It complements :func:`operators.dedup.connected_components`, the
+engine's other iterative-join algorithm.
+
+The frontier kernels (k-core, k-truss, SCC, BFS, weighted shortest
+paths, DAG layers and the probe panels) share one loop,
+:func:`operators.cache.fixpoint`: checkpoint the state, release the one
+it supersedes, step. Their early exit on a repeated row count proves a
+fixpoint only for a grow-only or shrink-only state, so only those
+kernels use it; weighted shortest paths and DAG layers run every sweep.
 
 Determinism: ranks are carried as FIXED-POINT BIGINTs (scaled by
 ``10^SCALE``); every iteration is integer division and integer sums —
@@ -28,7 +41,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from cosmos_xenna_spark.operators.cache import release_local_checkpoint, scoped_persist
+from cosmos_xenna_spark.operators.cache import fixpoint, release_local_checkpoint, scoped_persist
 
 SCALE = 12  # fixed-point decimal digits
 ONE = 10**SCALE
@@ -436,43 +449,25 @@ def k_core(
     endpoint key, the survivor table stays one row per node.
     """
     e = _sym_undirected_ckpt(edges, src_col, dst_col)
-    surv = (
-        e.groupBy(F.col("a").alias("node"))
-        .agg(F.count(F.lit(1)).alias("degree"))
-        .filter(F.col("degree") >= k)
-    )
-    prev: DataFrame | None = None
-    prev_n = -1
-    for _ in range(n_sweeps):
-        # eager per-sweep checkpoint of the node-sized survivor table:
-        # without it the static plan compounds to 2 joins x n_sweeps
-        # branches (the PageRank loop-invariant lesson; the plan lint
-        # measured 28 shuffles for 4 un-checkpointed sweeps). Sweep
-        # k-1's checkpoint is dead once sweep k's materializes —
-        # release it promptly (the SCC discipline); the final one
-        # backs the lazy return.
-        surv = surv.localCheckpoint(eager=True)
-        if prev is not None:
-            release_local_checkpoint(prev)
-        prev = surv
-        # Early fixed-point exit (the k_truss precedent): peeling only
-        # REMOVES nodes, so an unchanged survivor COUNT means an
-        # unchanged survivor SET and every remaining sweep recomputes
-        # bit-identical degrees — skip them. One narrow scalar scan of
-        # the just-checkpointed frame per sweep.
-        n = surv.count()
-        if n == prev_n:
-            break
-        prev_n = n
-        alive = e.join(
-            surv.select(F.col("node").alias("a")), "a"
-        ).join(surv.select(F.col("node").alias("b")), "b")
-        surv = (
+
+    def degrees(alive: DataFrame) -> DataFrame:
+        return (
             alive.groupBy(F.col("a").alias("node"))
             .agg(F.count(F.lit(1)).alias("degree"))
             .filter(F.col("degree") >= k)
         )
-    return surv
+
+    def sweep(surv: DataFrame) -> DataFrame:
+        return degrees(
+            e.join(surv.select(F.col("node").alias("a")), "a").join(
+                surv.select(F.col("node").alias("b")), "b"
+            )
+        )
+
+    # without the per-sweep checkpoint the static plan compounds to
+    # 2 joins x n_sweeps branches (28 shuffles for 4 sweeps); peeling
+    # only removes nodes, so the survivor set is shrink-only
+    return fixpoint(degrees(e), sweep, n_sweeps, monotone=True)
 
 
 def k_core_sql(edges_sql: str, k: int, n_sweeps: int = 8) -> str:
@@ -530,32 +525,16 @@ def bfs_hops(
     dist = seeds.select(F.col(node_col).alias("node")).distinct().withColumn(
         "hops", F.lit(0).cast("bigint")
     )
-    prev: DataFrame | None = None
-    prev_n = -1
-    for _ in range(n_hops):
-        # eager per-hop checkpoint (same discipline as k_core): the
-        # frontier is node-sized, and an un-checkpointed loop re-plans
-        # the seed derivation once per hop branch. Superseded hop
-        # checkpoints are released promptly (the SCC discipline).
-        dist = dist.localCheckpoint(eager=True)
-        if prev is not None:
-            release_local_checkpoint(prev)
-        prev = dist
-        # Early fixed-point exit (the k_truss precedent): the reached
-        # set only GROWS, and a node's min-hop is exact the moment it
-        # first appears (BFS frontier property), so an unchanged row
-        # COUNT means an unchanged table and every remaining hop would
-        # recompute it bit-identically. One narrow scalar scan of the
-        # just-checkpointed frame per hop.
-        n = dist.count()
-        if n == prev_n:
-            break
-        prev_n = n
+
+    def hop(dist: DataFrame) -> DataFrame:
         step = e.join(
             dist.select(F.col("node").alias("b"), "hops"), "b"
         ).select(F.col("a").alias("node"), (F.col("hops") + 1).alias("hops"))
-        dist = dist.union(step).groupBy("node").agg(F.min("hops").alias("hops"))
-    return dist
+        return dist.union(step).groupBy("node").agg(F.min("hops").alias("hops"))
+
+    # the reached set only grows, and a node's min-hop is exact the
+    # moment it first appears (BFS frontier property)
+    return fixpoint(dist, hop, n_hops, monotone=True)
 
 
 def bfs_hops_sql(edges_sql: str, seeds_sql: str, n_hops: int) -> str:
@@ -627,17 +606,9 @@ def k_truss(
         )
         .filter(F.col("a") != F.col("b"))
         .distinct()
-        .localCheckpoint(eager=True)
     )
-    # Early fixed-point exit: peeling only REMOVES edges, so an
-    # unchanged edge COUNT means an unchanged edge SET, and every
-    # remaining sweep would recompute bit-identical supports over the
-    # same survivors — skip them. The count is a one-scan scalar over
-    # the just-checkpointed frame; results are provably identical to
-    # running all n_sweeps.
-    n_edges = e.count()
-    prev = e
-    for _ in range(n_sweeps):
+
+    def sweep(e: DataFrame) -> DataFrame:
         cur = e.select("a", "b")
         sym = cur.union(cur.select(F.col("b").alias("a"), F.col("a").alias("b")))
         wedges = (
@@ -649,22 +620,16 @@ def k_truss(
             .groupBy("a", "b")
             .agg(F.count(F.lit(1)).alias("__sup"))
         )
-        e = (
+        return (
             cur.join(wedges, ["a", "b"], "left")
             .withColumn("support", F.coalesce(F.col("__sup"), F.lit(0)))
             .drop("__sup")
             .filter(F.col("support") >= k - 2)
-            .localCheckpoint(eager=True)
         )
-        # Sweep k-1's edge checkpoint is dead once sweep k's has
-        # materialized — release it promptly (SCC discipline); the
-        # final one backs the lazy return.
-        release_local_checkpoint(prev)
-        prev = e
-        new_count = e.count()
-        if new_count == n_edges:
-            break
-        n_edges = new_count
+
+    # peeling only removes edges; n_sweeps >= 1, so even an early exit
+    # returns a swept frame that carries ``support``
+    e = fixpoint(e, sweep, n_sweeps, monotone=True)
     return e.select(
         F.col("a").alias("src"),
         F.col("b").alias("dst"),
@@ -1068,35 +1033,18 @@ def scc_labels(
     )
 
     def _sweep(forward: bool) -> DataFrame:
-        # One direction's n_hops closure. The per-hop checkpoint
-        # truncates lineage; hop k-1's blocks are dead once hop k has
-        # materialized and are released promptly (they used to pile up
-        # in the block manager until ContextCleaner got to them).
-        # Count-based early fixed-point exit (the k_truss precedent):
-        # the closure set only GROWS, so an unchanged (node, reach)
-        # count means every remaining hop recomputes it bit-identically.
-        cur = nodes.withColumn("reach", F.col("node"))
-        prev: DataFrame | None = None
-        prev_n = -1
-        for _ in range(n_hops):
-            cur = cur.localCheckpoint(eager=True)
-            if prev is not None:
-                release_local_checkpoint(prev)
-            prev = cur
-            n = cur.count()
-            if n == prev_n:
-                break
-            prev_n = n
-            if forward:
-                step = cur.join(e, cur.reach == e.src).select(
-                    "node", F.col("dst").alias("reach")
-                )
-            else:
-                step = cur.join(e, cur.reach == e.dst).select(
-                    "node", F.col("src").alias("reach")
-                )
-            cur = cur.union(step).distinct()
-        return cur
+        # One direction's n_hops closure; the closure set only grows.
+        frm, to = ("src", "dst") if forward else ("dst", "src")
+
+        def hop(cur: DataFrame) -> DataFrame:
+            step = cur.join(e, cur.reach == e[frm]).select(
+                "node", F.col(to).alias("reach")
+            )
+            return cur.union(step).distinct()
+
+        return fixpoint(
+            nodes.withColumn("reach", F.col("node")), hop, n_hops, monotone=True
+        )
 
     # The forward and backward sweeps are INDEPENDENT job chains until
     # the final intersection — submit them from two driver threads so
@@ -1194,18 +1142,16 @@ def sssp_weighted(
     dist = seeds.select(F.col(node_col).alias("node")).distinct().withColumn(
         "cost", F.lit(0).cast("bigint")
     )
-    prev: DataFrame | None = None
-    for _ in range(n_sweeps):
-        # Superseded sweep checkpoints released promptly (SCC
-        # discipline); the final one backs the lazy return.
-        dist = dist.localCheckpoint(eager=True)
-        if prev is not None:
-            release_local_checkpoint(prev)
-        prev = dist
+
+    def relax(dist: DataFrame) -> DataFrame:
         step = e.join(
             dist.select(F.col("node").alias("src"), "cost"), "src"
         ).select(F.col("dst").alias("node"), (F.col("cost") + F.col("w")).alias("cost"))
-        dist = dist.union(step).groupBy("node").agg(F.min("cost").alias("cost"))
+        return dist.union(step).groupBy("node").agg(F.min("cost").alias("cost"))
+
+    # a cost can still fall after the reached set stops growing, so a
+    # repeated count is no fixpoint here
+    dist = fixpoint(dist, relax, n_sweeps, monotone=False)
     return dist.select(F.col("node").cast("bigint").alias("node"), "cost")
 
 
@@ -1584,20 +1530,16 @@ def dag_layers(
         .distinct()
         .withColumn("layer", F.lit(0).cast("bigint"))
     )
-    prev: DataFrame | None = None
-    for _ in range(n_sweeps):
-        # Superseded sweep checkpoints released promptly (SCC
-        # discipline); the final one backs the lazy return.
-        layer = layer.localCheckpoint(eager=True)
-        if prev is not None:
-            release_local_checkpoint(prev)
-        prev = layer
+
+    def sweep(layer: DataFrame) -> DataFrame:
         step = e.join(
             layer.select(F.col("node").alias("src"), "layer"), "src"
         ).select(F.col("dst").alias("node"), (F.col("layer") + 1).alias("layer"))
-        layer = layer.union(step).groupBy("node").agg(
-            F.max("layer").alias("layer")
-        )
+        return layer.union(step).groupBy("node").agg(F.max("layer").alias("layer"))
+
+    # every node is present from the start and only its layer changes,
+    # so the row count never moves and cannot signal a fixpoint
+    layer = fixpoint(layer, sweep, n_sweeps, monotone=False)
     return layer.select(F.col("node").cast("bigint").alias("node"), "layer")
 
 
@@ -1736,6 +1678,35 @@ def clustering_coefficient_sql(
     """
 
 
+def _probe_distances(
+    edges: DataFrame,
+    seeds: DataFrame,
+    n_hops: int,
+    src_col: str,
+    dst_col: str,
+    node_col: str,
+) -> DataFrame:
+    """``(s, node, hops)``: the min undirected hop count from each probe
+    seed ``s`` to every node it reaches within ``n_hops`` — one BFS per
+    probe, run simultaneously over one shared edge checkpoint. The
+    reached (probe, node) set only grows and min-hops are exact on first
+    appearance, so the state is grow-only."""
+    e = _sym_undirected_ckpt(edges, src_col, dst_col)
+
+    def hop(dist: DataFrame) -> DataFrame:
+        step = e.join(
+            dist.select("s", F.col("node").alias("b"), "hops"), "b"
+        ).select("s", F.col("a").alias("node"), (F.col("hops") + 1).alias("hops"))
+        return dist.union(step).groupBy("s", "node").agg(F.min("hops").alias("hops"))
+
+    dist = (
+        seeds.select(F.col(node_col).alias("s"))
+        .distinct()
+        .select("s", F.col("s").alias("node"), F.lit(0).cast("bigint").alias("hops"))
+    )
+    return fixpoint(dist, hop, n_hops, monotone=True)
+
+
 def eccentricity_probes(
     edges: DataFrame,
     seeds: DataFrame,
@@ -1757,39 +1728,7 @@ def eccentricity_probes(
     serves every probe.  Bit-exact vs the unrolled SQL oracle for
     fixed ``n_hops``.
     """
-    e = _sym_undirected_ckpt(edges, src_col, dst_col)
-    dist = (
-        seeds.select(F.col(node_col).alias("s"))
-        .distinct()
-        .select("s", F.col("s").alias("node"), F.lit(0).cast("bigint").alias("hops"))
-    )
-    # Hop k-1's checkpoint is dead the moment hop k's has materialized —
-    # release it promptly (the SCC sweep discipline) instead of letting
-    # superseded distance tables pile up in the block manager until the
-    # JVM GC gets to them. The FINAL checkpoint stays: the returned
-    # frame plans against it lazily.
-    prev: DataFrame | None = None
-    prev_n = -1
-    for _ in range(n_hops):
-        dist = dist.localCheckpoint(eager=True)
-        if prev is not None:
-            release_local_checkpoint(prev)
-        prev = dist
-        # Early fixed-point exit (the k_truss precedent): the reached
-        # (probe, node) set only GROWS and min-hops are exact on first
-        # appearance, so an unchanged count means every remaining hop
-        # recomputes the table bit-identically. One narrow scalar scan
-        # of the just-checkpointed frame per hop.
-        n = dist.count()
-        if n == prev_n:
-            break
-        prev_n = n
-        step = e.join(
-            dist.select("s", F.col("node").alias("b"), "hops"), "b"
-        ).select("s", F.col("a").alias("node"), (F.col("hops") + 1).alias("hops"))
-        dist = (
-            dist.union(step).groupBy("s", "node").agg(F.min("hops").alias("hops"))
-        )
+    dist = _probe_distances(edges, seeds, n_hops, src_col, dst_col, node_col)
     return dist.groupBy("node").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_probes"),
         F.max("hops").cast("bigint").alias("ecc_lb"),
@@ -1858,32 +1797,7 @@ def harmonic_centrality_probes(
     merge per sweep); only the final aggregation differs.  Bit-exact
     vs the unrolled SQL oracle for fixed ``n_hops``.
     """
-    e = _sym_undirected_ckpt(edges, src_col, dst_col)
-    dist = (
-        seeds.select(F.col(node_col).alias("s"))
-        .distinct()
-        .select("s", F.col("s").alias("node"), F.lit(0).cast("bigint").alias("hops"))
-    )
-    # Same prompt per-hop checkpoint release AND count-based early
-    # fixed-point exit as eccentricity_probes (the reached set only
-    # grows, min-hops exact on first appearance).
-    prev: DataFrame | None = None
-    prev_n = -1
-    for _ in range(n_hops):
-        dist = dist.localCheckpoint(eager=True)
-        if prev is not None:
-            release_local_checkpoint(prev)
-        prev = dist
-        n = dist.count()
-        if n == prev_n:
-            break
-        prev_n = n
-        step = e.join(
-            dist.select("s", F.col("node").alias("b"), "hops"), "b"
-        ).select("s", F.col("a").alias("node"), (F.col("hops") + 1).alias("hops"))
-        dist = (
-            dist.union(step).groupBy("s", "node").agg(F.min("hops").alias("hops"))
-        )
+    dist = _probe_distances(edges, seeds, n_hops, src_col, dst_col, node_col)
     return (
         dist.filter(F.col("hops") >= 1)
         .groupBy("node")

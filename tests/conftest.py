@@ -2,6 +2,7 @@ from __future__ import annotations
 
 import os
 import sys
+import uuid
 
 import pytest
 
@@ -35,3 +36,44 @@ def duck(sf_dir):
     con = make_duckdb(sf_dir)
     yield con
     con.close()
+
+
+@pytest.fixture
+def job_meter(spark, monkeypatch):
+    """``run(fn) -> (result, n_jobs, checkpoints)``: the Spark jobs ``fn``
+    ran, counted by job group (helper threads inherit it), and the frames
+    its ``localCheckpoint`` calls returned. AQE and broadcast joins are
+    off while the fixture is active, so every action is exactly one job:
+    AQE submits each shuffle stage as a job of its own, and a broadcast
+    join one more for its build side."""
+    sc = spark.sparkContext
+    taken: list = []
+    cls = type(spark.range(1))
+    real = cls.localCheckpoint
+
+    def spy(self, *args, **kwargs):
+        out = real(self, *args, **kwargs)
+        taken.append(out)
+        return out
+
+    monkeypatch.setattr(cls, "localCheckpoint", spy)
+    confs = {"spark.sql.adaptive.enabled": "false", "spark.sql.autoBroadcastJoinThreshold": "-1"}
+    saved = {k: spark.conf.get(k) for k in confs}
+    for k, v in confs.items():
+        spark.conf.set(k, v)
+
+    def run(fn):
+        group = f"job_meter-{uuid.uuid4().hex}"
+        taken.clear()
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return out, len(sc.statusTracker().getJobIdsForGroup(group)), list(taken)
+
+    yield run
+    for k, v in saved.items():
+        spark.conf.set(k, v)

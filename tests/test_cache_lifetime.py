@@ -11,9 +11,13 @@ state.
 from __future__ import annotations
 
 import gc
+import threading
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import Row
+from pyspark.sql import functions as F
 
+from cosmos_xenna_spark.operators.cache import _checkpoint_rdd, fixpoint
 from cosmos_xenna_spark.operators.dedup import (
     connected_components,
     jaccard_verify_pairs,
@@ -113,3 +117,78 @@ def test_connected_components_derived_frames_survive_handle_gc(spark):
     out = None
     gc.collect()  # would fire any (wrong) finalizer tied to `out`
     assert derived.count() == 9
+
+
+def _grow(limit: int):
+    """A grow-only toy step: ``{0..i}`` becomes ``{0..min(i + 1, limit - 1)}``,
+    so from ``{0}`` the state stops changing after ``limit - 1`` steps."""
+
+    def step(s):
+        nxt = s.select((F.col("id") + 1).alias("id")).filter(F.col("id") < limit)
+        return s.union(nxt).distinct()
+
+    return step
+
+
+def _rows(df) -> list[int]:
+    return sorted(r.id for r in df.collect())
+
+
+def test_fixpoint_count_rides_the_checkpoint_job(spark, job_meter):
+    """One Spark job per checkpointed step: the row count behind the
+    early exit comes from the checkpoint action, not a count() job."""
+    out, jobs, taken = job_meter(
+        lambda: fixpoint(spark.range(1), _grow(4), 10, monotone=True)
+    )
+    # {0} {0,1} {0,1,2} {0..3} {0..3}: the fifth count repeats the fourth
+    assert len(taken) == 5
+    assert jobs == len(taken)
+    assert _rows(out) == [0, 1, 2, 3]
+
+
+def test_fixpoint_early_exit_matches_full_run(spark, job_meter):
+    early, _, early_ckpts = job_meter(
+        lambda: fixpoint(spark.range(1), _grow(4), 10, monotone=True)
+    )
+    full, _, full_ckpts = job_meter(
+        lambda: fixpoint(spark.range(1), _grow(4), 10, monotone=False)
+    )
+    assert len(early_ckpts) == 5  # stops at the first repeated count
+    assert len(full_ckpts) == 10  # one checkpoint before each step
+    assert _rows(early) == _rows(full) == [0, 1, 2, 3]
+
+
+def test_fixpoint_releases_superseded_checkpoints(spark, job_meter):
+    out, _, taken = job_meter(
+        lambda: fixpoint(spark.range(1), _grow(6), 4, monotone=False)
+    )
+    ids = [_checkpoint_rdd(df).id() for df in taken]
+    pinned = _ids(spark)
+    assert not (pinned & set(ids[:-1])), "superseded checkpoints still pinned"
+    assert ids[-1] in pinned, "the lazy result plans against the final checkpoint"
+    # the caller drops every handle but the result; it must still run
+    del taken
+    gc.collect()
+    assert _rows(out) == [0, 1, 2, 3, 4]
+
+
+def test_fixpoint_on_two_threads_matches_sequential(spark):
+    def run(limit):
+        return _rows(fixpoint(spark.range(1), _grow(limit), 8, monotone=True))
+
+    sequential = {3: run(3), 5: run(5)}
+    threaded: dict[int, list[int]] = {}
+
+    def target(limit):
+        threaded[limit] = run(limit)
+
+    threads = [
+        threading.Thread(target=inheritable_thread_target(spark)(target), args=(limit,))
+        for limit in (3, 5)
+    ]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(timeout=300)
+        assert not t.is_alive()
+    assert threaded == sequential == {3: [0, 1, 2], 5: [0, 1, 2, 3, 4]}

@@ -5,7 +5,7 @@ from __future__ import annotations
 
 import pytest
 
-from cosmos_xenna_spark.operators.graph import ONE, pagerank_fixed
+from cosmos_xenna_spark.operators.graph import ONE, k_core, pagerank_fixed, scc_labels
 
 
 def _ranks(df):
@@ -168,6 +168,29 @@ def test_k_core_fixed_sweeps_deterministic(spark):
     a = sorted(map(tuple, k_core(df.repartition(1), 2, n_sweeps=3).collect()))
     b = sorted(map(tuple, k_core(df.repartition(13, "src"), 2, n_sweeps=3).collect()))
     assert a == b
+
+
+@pytest.mark.parametrize(
+    "kernel, want",
+    [
+        (
+            lambda df: scc_labels(df, n_hops=6),
+            [(1, 1), (2, 1), (3, 1), (4, 4), (5, 5), (6, 6)],
+        ),
+        (lambda df: k_core(df, k=2, n_sweeps=6), [(1, 2), (2, 2), (3, 2)]),
+    ],
+    ids=["scc_labels", "k_core"],
+)
+def test_frontier_loop_runs_no_count_jobs(spark, job_meter, kernel, want):
+    """The early fixed-point exit reads its row count off the checkpoint
+    job: a frontier kernel runs one job per checkpoint plus the final
+    action, and no separate count() jobs."""
+    # a 3-cycle with a tail: one SCC, and a triangle with a pendant chain
+    edges = [(1, 2), (2, 3), (3, 1), (3, 4), (4, 5), (5, 6)]
+    df = spark.createDataFrame(edges, "src long, dst long")
+    rows, jobs, taken = job_meter(lambda: sorted(map(tuple, kernel(df).collect())))
+    assert rows == want
+    assert jobs <= len(taken) + 1, f"{jobs} jobs for {len(taken)} checkpoints"
 
 
 def test_bfs_hops_matches_python_bfs(spark):
