@@ -34,6 +34,9 @@ from pyspark.sql import functions as F
 from cosmos_xenna_spark.operators.cache import release_local_checkpoint
 
 EOW = "</w>"
+# Merges between symbol-table checkpoints: each merge nests one more
+# rewrite expression into the plan.
+CHECKPOINT_EVERY = 4
 
 
 def word_frequencies(docs: DataFrame, text_col: str = "text") -> DataFrame:
@@ -93,13 +96,13 @@ def bpe_train(
     text_col: str = "text",
     n_merges: int = 50,
     min_pair_count: int = 2,
-    checkpoint_every: int = 4,
 ) -> list[tuple[str, str]]:
     """Learn ``n_merges`` BPE merges from the corpus; returns the merge
     list in rank order.  Stops early when no pair reaches
-    ``min_pair_count``."""
+    ``min_pair_count``.  The result is a Python list, so every symbol
+    table checkpoint this makes is released before it returns."""
     symtab = _initial_symbols(word_frequencies(docs, text_col)).localCheckpoint(eager=True)
-    prev_ckpt = None
+    held = symtab  # the checkpoint the current symbol table plans against
     merges: list[tuple[str, str]] = []
     try:
         for i in range(n_merges):
@@ -114,14 +117,12 @@ def bpe_train(
             left, right = top[0]["left"], top[0]["right"]
             merges.append((left, right))
             symtab = _apply_merge(symtab, left, right)
-            if (i + 1) % checkpoint_every == 0:
-                new_tab = symtab.localCheckpoint(eager=True)
-                if prev_ckpt is not None:
-                    release_local_checkpoint(prev_ckpt)
-                prev_ckpt, symtab = symtab, new_tab
+            if (i + 1) % CHECKPOINT_EVERY == 0:
+                symtab = symtab.localCheckpoint(eager=True)
+                release_local_checkpoint(held)
+                held = symtab
     finally:
-        if prev_ckpt is not None:
-            release_local_checkpoint(prev_ckpt)
+        release_local_checkpoint(held)
     return merges
 
 

@@ -32,6 +32,12 @@ the result DataFrame handed back to the caller:
   keep planning against the final checkpoint's blocks after the
   original handle dies. Only release state that is provably
   superseded; leave the final checkpoint to the JVM's ContextCleaner.
+- :func:`fixpoint` is the iterative loop built on the two checkpoint
+  helpers: :func:`checkpoint` the state (local or reliable, the one
+  place that choice is made), release the checkpoint it supersedes,
+  step. Its optional stop signal is an aggregate observed on each
+  checkpoint's own job; stopping when the value repeats is sound only
+  when an equal observed value means an equal state.
 
 All releases are best-effort and non-blocking: at interpreter shutdown
 the JVM gateway may already be gone, and a failed unpersist just means
@@ -43,8 +49,7 @@ from __future__ import annotations
 import weakref
 from typing import Callable
 
-from pyspark.sql import DataFrame, Observation
-from pyspark.sql import functions as F
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.storagelevel import StorageLevel
 
 
@@ -117,43 +122,59 @@ def release_local_checkpoint(df: DataFrame) -> None:
             pass
 
 
+def checkpoint(df: DataFrame, *, reliable: bool = False) -> DataFrame:
+    """Eagerly checkpoint ``df``: ``localCheckpoint`` by default, or a
+    reliable ``checkpoint`` into the context's checkpoint directory.
+
+    The one place that picks the checkpoint kind. Local checkpoints
+    live in executor block managers and die with their executor;
+    reliable ones survive it at the cost of a write to durable storage.
+    """
+    return df.checkpoint(eager=True) if reliable else df.localCheckpoint(eager=True)
+
+
 def fixpoint(
     state: DataFrame,
     step: Callable[[DataFrame], DataFrame],
     n_steps: int,
+    signal: Column | None = None,
     *,
-    monotone: bool,
+    reliable: bool = False,
 ) -> DataFrame:
     """Apply ``step`` ``n_steps`` times, checkpointing before each step.
 
-    Each step's input is an eager ``localCheckpoint``, so the plan stays
-    linear in ``n_steps``. Each new checkpoint releases the one it
-    supersedes; the final one is left to the ContextCleaner. After
-    ``n_steps`` steps the last step's frame is returned lazily.
+    Each step's input is an eager :func:`checkpoint` (``reliable``
+    picks the kind), so the plan stays linear in ``n_steps``. Each new
+    local checkpoint releases the one it supersedes; the final one is
+    left to the ContextCleaner, and reliable checkpoints are never
+    released. After ``n_steps`` steps the last step's frame is returned
+    lazily.
 
-    ``monotone=True`` stops at the first checkpoint whose row count
-    repeats the previous one and returns that checkpoint. This is only
-    sound when ``step`` never both adds and removes rows (a grow-only or
-    shrink-only state): then an equal count is an equal set, and every
-    remaining step would recompute it unchanged. The count is an
-    ``observe`` on the checkpoint's own job, and each step gets a fresh
-    unnamed ``Observation`` so loops on concurrent driver threads never
-    share one.
+    ``signal`` is an aggregate over the state, observed on each
+    checkpoint's own job. Without it every step runs. With it the loop
+    stops at the first checkpoint whose value repeats the previous one
+    and returns that checkpoint. This is sound only when an equal
+    observed value means an equal state, so that every remaining step
+    would recompute it unchanged: ``F.count(F.lit(1))`` for a grow-only
+    or shrink-only row set, an exact sum for a column no step ever
+    increases over a fixed key set. Each step gets a fresh unnamed
+    ``Observation`` so loops on concurrent driver threads never share
+    one.
     """
     prev: DataFrame | None = None
-    prev_n = -1
+    prev_v: object = object()
     for _ in range(n_steps):
-        if monotone:
+        if signal is not None:
             seen = Observation()
-            state = state.observe(seen, F.count(F.lit(1)).alias("n"))
-        state = state.localCheckpoint(eager=True)
-        if prev is not None:
+            state = state.observe(seen, signal.alias("v"))
+        state = checkpoint(state, reliable=reliable)
+        if prev is not None and not reliable:
             release_local_checkpoint(prev)
         prev = state
-        if monotone:
-            n = seen.get["n"]
-            if n == prev_n:
+        if signal is not None:
+            v = seen.get["v"]
+            if v == prev_v:
                 break
-            prev_n = n
+            prev_v = v
         state = step(state)
     return state

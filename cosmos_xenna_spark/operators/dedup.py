@@ -20,9 +20,13 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegralType
 
 from cosmos_xenna_spark.functions import md5_long63
 from cosmos_xenna_spark.operators.cache import (
+    _checkpoint_rdd,
+    checkpoint,
+    fixpoint,
     release_local_checkpoint,
     scoped_persist,
 )
@@ -311,7 +315,12 @@ def connected_components(
     (join-of-join-of-...), so Catalyst analysis time and driver stack
     grow until a deep graph (long chains) blows up; checkpointing
     truncates the lineage so round k plans against a leaf, not k-1
-    replayed joins.
+    replayed joins. The rounds run on :func:`operators.cache.fixpoint`,
+    which stops once the exact sum of the labels repeats: over the fixed
+    id set no label ever increases, so an equal sum means no label
+    changed. The sum is observed on the round's own checkpoint job.
+    Ids must be integers (the sum is taken as ``decimal(38,0)``, which
+    cannot overflow).
 
     ``reliable_checkpoint=True`` uses ``df.checkpoint()`` against
     ``spark.sparkContext.setCheckpointDir(...)`` (the caller must have
@@ -322,10 +331,11 @@ def connected_components(
     is the right default for interactive/test runs — no durable-store
     round-trip per iteration.
     """
-
-    def ckpt(df: DataFrame) -> DataFrame:
-        return df.checkpoint(eager=True) if reliable_checkpoint else df.localCheckpoint(eager=True)
-
+    for c in (src_col, dst_col):
+        if not isinstance(pairs.schema[c].dataType, IntegralType):
+            raise TypeError(
+                f"connected_components needs integer ids, got {c}: {pairs.schema[c].dataType}"
+            )
     # Symmetrize with a row-local explode, NOT a union of two copies of
     # the pair subtree: Spark does not dedupe identical subplans, so the
     # former ``pairs.union(pairs.reversed)`` executed the ENTIRE
@@ -345,7 +355,7 @@ def connected_components(
     # byte-based sizing is the correct regime (unlike the verify);
     # locally AQE folds the tiny edge table to 1-2 partitions, at
     # scale a big edge table keeps its width.
-    edges = ckpt(
+    edges = checkpoint(
         pairs.select(
             F.explode(
                 F.array(
@@ -359,12 +369,29 @@ def connected_components(
             ).alias("__e")
         )
         .select("__e.src", "__e.dst")
-        .repartition(F.col("src"))
+        .repartition(F.col("src")),
+        reliable=reliable_checkpoint,
     )
     if max_iter < 1:  # degenerate contract: zero rounds = self labels
         return edges.select("src").distinct().select(
             F.col("src").alias("doc_id"), F.col("src").alias("cluster_id")
         )
+
+    def step(labels: DataFrame) -> DataFrame:
+        nbr = edges.join(labels, edges.dst == labels.id).select(
+            F.col("src").alias("id"), "label"
+        )
+        lab2 = labels.select(F.col("id").alias("l_id"), F.col("label").alias("l_label"))
+        jump = labels.join(lab2, labels.label == lab2.l_id, "left").select(
+            "id", F.coalesce("l_label", "label").alias("label")
+        )
+        return (
+            labels.unionByName(nbr)
+            .unionByName(jump)
+            .groupBy("id")
+            .agg(F.min("label").alias("label"))
+        )
+
     # Seed the label table with ROUND 1's result directly: the first
     # propagation round of min-label iteration computes exactly
     # ``min(id, min neighbor)`` (the jump term is the identity while
@@ -372,58 +399,26 @@ def connected_components(
     # symmetrized edge checkpoint — the same single exchange the old
     # ``edges.select(src).distinct()`` init paid, so the first (and
     # busiest) join round of the loop comes free.
-    labels = ckpt(
+    labels = fixpoint(
         edges.groupBy(F.col("src").alias("id")).agg(
             F.min(F.least("src", "dst")).alias("label")
-        )
+        ),
+        step,
+        max_iter - 1,
+        F.sum(F.col("label").cast("decimal(38,0)")),
+        reliable=reliable_checkpoint,
     )
-    null_label = F.lit(None).cast(dict(edges.dtypes)["src"])
-    holder = labels  # the checkpoint backing the current label table
-    for _ in range(max_iter - 1):
-        nbr = edges.join(labels, edges.dst == labels.id).select(
-            F.col("src").alias("id"), F.col("label"), null_label.alias("old")
-        )
-        lab2 = labels.select(F.col("id").alias("l_id"), F.col("label").alias("l_label"))
-        jump = labels.join(lab2, labels.label == lab2.l_id, "left").select(
-            "id",
-            F.coalesce("l_label", "label").alias("label"),
-            null_label.alias("old"),
-        )
-        # The convergence signal rides along in the SAME aggregation
-        # that builds the new labels: the old-labels branch tags each
-        # id with its previous label (`old`; NULL on the other two
-        # branches, so min() recovers it), and `changed` is then a
-        # single narrow scan of the just-checkpointed result — no extra
-        # join+shuffle job per iteration.
-        new_labels = ckpt(
-            labels.withColumn("old", F.col("label"))
-            .unionByName(nbr)
-            .unionByName(jump)
-            .groupBy("id")
-            .agg(F.min("label").alias("label"), F.min("old").alias("old"))
-        )
-        changed = new_labels.filter(F.col("label") != F.col("old")).limit(1).count()
-        # Round k's blocks are dead the moment round k+1 has
-        # materialized; release them now instead of waiting for JVM GC
-        # (left to GC, a multi-round run holds every iteration's label
-        # table in the block manager simultaneously).
-        if not reliable_checkpoint:
-            release_local_checkpoint(holder)
-        holder = new_labels
-        labels = new_labels.select("id", "label")
-        if changed == 0:
-            break
-    out = labels.select(F.col("id").alias("doc_id"), F.col("label").alias("cluster_id"))
-    if not reliable_checkpoint:
-        # The edge table is dead once the loop exits (the result plans
-        # only against the final label checkpoint). The final checkpoint
-        # itself must NOT be force-released on any Python-side lifetime
-        # signal: frames DERIVED from the result keep planning against
-        # its blocks long after the original handle is gone, so its
-        # cleanup belongs to the JVM's ContextCleaner (one small label
-        # table per call — bounded).
+    # Once the loop has converged the result is the final label
+    # checkpoint and no longer plans against the edge table, so the
+    # edges are released; a run cut off at ``max_iter`` returns its last
+    # round lazily over them. The final label checkpoint itself must NOT
+    # be force-released on any Python-side lifetime signal: frames
+    # DERIVED from the result keep planning against its blocks long
+    # after the original handle is gone, so its cleanup belongs to the
+    # JVM's ContextCleaner (one small label table per call — bounded).
+    if not reliable_checkpoint and _checkpoint_rdd(labels) is not None:
         release_local_checkpoint(edges)
-    return out
+    return labels.select(F.col("id").alias("doc_id"), F.col("label").alias("cluster_id"))
 
 
 def fuzzy_dedup_keep(

@@ -11,11 +11,14 @@ It complements :func:`operators.dedup.connected_components`, the
 engine's other iterative-join algorithm.
 
 The frontier kernels (k-core, k-truss, SCC, BFS, weighted shortest
-paths, DAG layers and the probe panels) share one loop,
+paths, DAG layers and the probe panels) and the rank walk behind plain
+and personalized PageRank share one loop,
 :func:`operators.cache.fixpoint`: checkpoint the state, release the one
 it supersedes, step. Their early exit on a repeated row count proves a
 fixpoint only for a grow-only or shrink-only state, so only those
-kernels use it; weighted shortest paths and DAG layers run every sweep.
+kernels use it; weighted shortest paths, DAG layers and the rank walk
+run every step. HITS keeps its own loop: it checkpoints two half-step
+frames per iteration.
 
 Determinism: ranks are carried as FIXED-POINT BIGINTs (scaled by
 ``10^SCALE``); every iteration is integer division and integer sums —
@@ -38,7 +41,7 @@ O(edges) with no driver materialization.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from cosmos_xenna_spark.operators.cache import fixpoint, release_local_checkpoint, scoped_persist
@@ -87,7 +90,6 @@ def pagerank_fixed(
     n_iter: int = 3,
     damping_pct: int = 85,
     weight_col: str | None = None,
-    broadcast_ranks: bool = True,
 ) -> DataFrame:
     """``n_iter`` PageRank iterations over ``edges`` (deduplicated).
     Returns ``(node, rank_fp)`` where ``rank_fp`` is the rank scaled
@@ -106,10 +108,7 @@ def pagerank_fixed(
     percentage):
     ``rank'(v) = (100 - d) * ONE / 100 / N  +  d * sum_{u->v} (rank(u) // out(u)) // 100``
     """
-    if not 0 < damping_pct < 100:
-        raise ValueError(f"damping_pct must be in (0,100), got {damping_pct}")
-    weighted = weight_col is not None
-    if not weighted:
+    if weight_col is None:
         e0 = edges.select(
             F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
         ).distinct()
@@ -123,6 +122,25 @@ def pagerank_fixed(
             .groupBy("src", "dst")
             .agg(F.sum("w").alias("w"))
         )
+    return _rank_walk(e0, None, n_iter, damping_pct)
+
+
+def _rank_walk(
+    e0: DataFrame, seeds: DataFrame | None, n_iter: int, damping_pct: int
+) -> DataFrame:
+    """The integer random walk behind :func:`pagerank_fixed` and
+    :func:`personalized_pagerank`: ``n_iter`` steps over the deduped
+    edge set ``e0`` (``src, dst`` plus an optional weight ``w``).
+
+    Each node carries a teleport weight ``tw``: 1 for every node
+    (PageRank), or 1 for the distinct ``node`` values of ``seeds`` and 0
+    elsewhere (personalized PageRank). With ``T = sum(tw)`` the walk
+    starts at ``tw * (ONE // T)`` and steps
+    ``rank'(v) = tw(v) * ((100 - d) * ONE // 100 // T) + got(v) * d // 100``,
+    so with ``tw = 1`` the arithmetic is exactly the plain PageRank rule.
+    """
+    if not 0 < damping_pct < 100:
+        raise ValueError(f"damping_pct must be in (0,100), got {damping_pct}")
     # Checkpoint the deduped edge set FIRST: `e0` (often an expensive
     # join/scan chain — q_pagerank derives it from a 4-table TPC-H
     # join) feeds FOUR plan branches (both node unions, the out-degree
@@ -136,7 +154,7 @@ def pagerank_fixed(
         .unionByName(e0.select(F.col("dst").alias("node")))
         .distinct()
     )
-    if weighted:
+    if "w" in e0.columns:
         out_w = e0.groupBy("src").agg(F.sum("w").alias("out_w"))
         e = e0.join(out_w, "src").withColumn(
             "share_ppm", F.expr("w * 1000000L div out_w")
@@ -146,6 +164,12 @@ def pagerank_fixed(
         out_w = e0.groupBy("src").agg(F.count(F.lit(1)).alias("out_deg"))
         e = e0.join(out_w, "src")
         give_expr = "rank_fp div out_deg"
+    if seeds is None:
+        nodes = nodes.withColumn("tw", F.lit(1))
+    else:
+        nodes = nodes.join(seeds.withColumn("tw", F.lit(1)), "node", "left").withColumn(
+            "tw", F.coalesce(F.col("tw"), F.lit(0))
+        )
     # Checkpoint the loop-invariant frames ONCE. Without this, every
     # iteration's plan re-derives `e` and `nodes` from the raw edge
     # input, and because `ranks` references them in multiple branches
@@ -153,64 +177,46 @@ def pagerank_fixed(
     # parquet scans / 27 shuffles (measured by scripts/plan_audit.py)
     # versus 2 scans / ~8 shuffles with the checkpoints — at 100 TB
     # that is the difference between reading the edge list twice and
-    # reading it 56 times.  Same lineage-truncation discipline as
-    # connected_components (operators/dedup.py).
+    # reading it 56 times. The teleport total T is observed on the
+    # node checkpoint's own job.
     e = e.localCheckpoint(eager=True)
-    nodes = nodes.localCheckpoint(eager=True)
+    seen = Observation()
+    nodes = nodes.observe(seen, F.sum("tw").alias("t")).localCheckpoint(eager=True)
     # The raw-edge checkpoint is dead once the two derived checkpoints
-    # above have materialized.
+    # above have materialized. The walk's result plans against `e`,
+    # `nodes` and the last rank checkpoint, so those three are left to
+    # the JVM ContextCleaner (frames derived from the result keep
+    # planning against them).
     release_local_checkpoint(e0)
-    n_nodes = nodes.count()  # one tiny scalar job; the literal feeds every iteration
-    base = (100 - damping_pct) * ONE // 100 // n_nodes
-    init = ONE // n_nodes
+    t = seen.get["t"] or 0
+    if t == 0:
+        raise ValueError("the walk needs >= 1 node (and, personalized, >= 1 seed in the graph)")
+    base = (100 - damping_pct) * ONE // 100 // t
 
-    ranks = nodes.withColumn("rank_fp", F.lit(init).cast("bigint"))
-    holder: DataFrame | None = None  # checkpoint backing the current ranks
-    for _ in range(n_iter):
+    def step(ranks: DataFrame) -> DataFrame:
         # Broadcast the node-sized rank frame into the SpMV join so the
         # edge list never re-shuffles across iterations (the hits_fixed
         # lesson: SMJ re-exchanged the whole edge table every step).
-        # broadcast_ranks=False is the billion-node fallback.
-        r_side = ranks.withColumnRenamed("node", "src")
-        contrib = (
-            e.join(F.broadcast(r_side) if broadcast_ranks else r_side, on="src", how="inner")
-            .select(
-                F.col("dst").alias("node"),
-                F.expr(give_expr).alias("give"),
-            )
-        )
+        contrib = e.join(
+            F.broadcast(ranks.withColumnRenamed("node", "src")), "src"
+        ).select(F.col("dst").alias("node"), F.expr(give_expr).alias("give"))
         summed = contrib.groupBy("node").agg(F.sum("give").alias("got"))
-        # The zero-fill left join pairs two node-sized frames; under the
-        # same memory condition that lets ranks broadcast into the SpMV
-        # join, `summed` broadcasts here — without the hint Spark picks
-        # an SMJ (two exchanges + sorts per iteration on the checkpointed
-        # node frame).
-        if broadcast_ranks:
-            summed = F.broadcast(summed)
-        ranks = (
-            nodes.join(summed, on="node", how="left")
-            .select(
-                "node",
-                (
-                    F.lit(base)
-                    + F.expr(f"coalesce(got, 0L) * {damping_pct} div 100")
-                ).cast("bigint").alias("rank_fp"),
-            )
-            .localCheckpoint(eager=True)
+        # The zero-fill left join pairs two node-sized frames; `summed`
+        # broadcasts for the same reason the ranks do — without the hint
+        # Spark picks an SMJ (two exchanges + sorts per iteration on the
+        # checkpointed node frame).
+        return nodes.join(F.broadcast(summed), "node", "left").select(
+            "node",
+            (
+                F.col("tw") * F.lit(base)
+                + F.expr(f"coalesce(got, 0L) * {damping_pct} div 100")
+            ).cast("bigint").alias("rank_fp"),
         )
-        # Iteration k-1's blocks are dead once k has materialized.
-        if holder is not None:
-            release_local_checkpoint(holder)
-        holder = ranks
-    # The edge/node checkpoints are dead once the loop exits (the
-    # result plans only against the final ranks checkpoint, which is
-    # left to the JVM ContextCleaner — frames derived from the result
-    # keep planning against it).  With n_iter=0 the result IS the
-    # node frame, so the node checkpoint must survive.
-    release_local_checkpoint(e)
-    if holder is not None:
-        release_local_checkpoint(nodes)
-    return ranks
+
+    ranks = nodes.select(
+        "node", (F.col("tw") * F.lit(ONE // t)).cast("bigint").alias("rank_fp")
+    )
+    return fixpoint(ranks, step, n_iter)
 
 
 def pagerank_fixed_sql(
@@ -467,7 +473,7 @@ def k_core(
     # without the per-sweep checkpoint the static plan compounds to
     # 2 joins x n_sweeps branches (28 shuffles for 4 sweeps); peeling
     # only removes nodes, so the survivor set is shrink-only
-    return fixpoint(degrees(e), sweep, n_sweeps, monotone=True)
+    return fixpoint(degrees(e), sweep, n_sweeps, F.count(F.lit(1)))
 
 
 def k_core_sql(edges_sql: str, k: int, n_sweeps: int = 8) -> str:
@@ -534,7 +540,7 @@ def bfs_hops(
 
     # the reached set only grows, and a node's min-hop is exact the
     # moment it first appears (BFS frontier property)
-    return fixpoint(dist, hop, n_hops, monotone=True)
+    return fixpoint(dist, hop, n_hops, F.count(F.lit(1)))
 
 
 def bfs_hops_sql(edges_sql: str, seeds_sql: str, n_hops: int) -> str:
@@ -629,7 +635,7 @@ def k_truss(
 
     # peeling only removes edges; n_sweeps >= 1, so even an early exit
     # returns a swept frame that carries ``support``
-    e = fixpoint(e, sweep, n_sweeps, monotone=True)
+    e = fixpoint(e, sweep, n_sweeps, F.count(F.lit(1)))
     return e.select(
         F.col("a").alias("src"),
         F.col("b").alias("dst"),
@@ -683,7 +689,6 @@ def hits_fixed(
     n_iter: int = 3,
     src_col: str = "src",
     dst_col: str = "dst",
-    broadcast_scores: bool = True,
 ) -> DataFrame:
     """``n_iter`` HITS (hubs & authorities) iterations over the
     directed edge set (deduplicated) — the link-analysis complement to
@@ -717,12 +722,9 @@ def hits_fixed(
     checkpointed and released per iteration so the static plan stays
     linear in ``n_iter``.  The norm is a driver-side 1-row scalar per
     half-step (the bounded-scalar pattern, like pagerank's node
-    count).  With ``broadcast_scores=True`` (default) the node-sized
-    score frame broadcasts into each SpMV join, so the EDGE LIST never
-    re-shuffles across iterations (measured: SMJ re-exchanged the
-    586k-edge table twice per half-step); set False for graphs whose
-    node table exceeds executor memory — the join falls back to SMJ on
-    the same keys.
+    count).  The node-sized score frame broadcasts into each SpMV join,
+    so the EDGE LIST never re-shuffles across iterations (measured: SMJ
+    re-exchanged the 586k-edge table twice per half-step).
     """
     if n_iter < 1:
         raise ValueError("hits_fixed needs n_iter >= 1")
@@ -773,7 +775,7 @@ def hits_fixed(
         # zero-fill of the FINAL frames below. Values are bit-identical.
         h_side = hubs.withColumnRenamed("node", "src")
         a_raw = (
-            e.join(F.broadcast(h_side) if broadcast_scores else h_side, "src")
+            e.join(F.broadcast(h_side), "src")
             .groupBy(F.col("dst").alias("node"))
             .agg(F.sum("h").alias("raw"))
             .localCheckpoint(eager=True)
@@ -787,7 +789,7 @@ def hits_fixed(
         auths = _norm(a_raw, "a")
         a_side = auths.withColumnRenamed("node", "dst")
         h_raw = (
-            e.join(F.broadcast(a_side) if broadcast_scores else a_side, "dst")
+            e.join(F.broadcast(a_side), "dst")
             .groupBy(F.col("src").alias("node"))
             .agg(F.sum("a").alias("raw"))
             .localCheckpoint(eager=True)
@@ -798,12 +800,10 @@ def hits_fixed(
         hubs = _norm(h_raw, "h")
     # One zero-fill at the end recovers the all-nodes contract (auth/hub
     # = 0 for nodes the raw sums never reached). The node-sized score
-    # frames broadcast under the same condition as the SpMV joins.
-    a_fin = F.broadcast(auths) if broadcast_scores else auths
-    h_fin = F.broadcast(hubs) if broadcast_scores else hubs
+    # frames broadcast, as in the SpMV joins.
     out = (
-        nodes.join(a_fin, "node", "left")
-        .join(h_fin, "node", "left")
+        nodes.join(F.broadcast(auths), "node", "left")
+        .join(F.broadcast(hubs), "node", "left")
         .select(
             "node",
             F.coalesce("a", F.lit(0)).cast("bigint").alias("auth_fp"),
@@ -868,7 +868,6 @@ def personalized_pagerank(
     src_col: str = "src",
     dst_col: str = "dst",
     seed_col: str = "node",
-    broadcast_ranks: bool = True,
 ) -> DataFrame:
     """Personalized PageRank: random walks RESTART at the seed set
     instead of uniformly — the graph-proximity score behind
@@ -876,75 +875,18 @@ def personalized_pagerank(
     everything topically near these known-good documents").  Nodes
     unreachable from the seeds score exactly 0.
 
-    Same exact int64 fixed-point contract as :func:`pagerank_fixed`
-    (scores x 10^12, integer div, bit-identical across engines and
-    partitionings); the teleport mass ``(100-d) * ONE / 100 / |S|``
-    lands only on seed nodes, and the initial mass is uniform over the
-    seeds.  Same loop discipline: loop-invariant edge/node frames
-    checkpointed once, rank frames rotated per iteration, node-sized
-    rank frame broadcast into the SpMV join.
+    Same exact int64 fixed-point contract and the same walk as
+    :func:`pagerank_fixed` (scores x 10^12, integer div, bit-identical
+    across engines and partitionings); the teleport mass
+    ``(100-d) * ONE / 100 / |S|`` lands only on seed nodes, and the
+    initial mass is uniform over the seeds. With every node a seed the
+    result equals :func:`pagerank_fixed` row for row.
     """
-    # Checkpoint the deduped edge set first: it feeds four plan
-    # branches (both node unions, the out-degree aggregate, the share
-    # join) and would otherwise execute once per branch (the
-    # pagerank_fixed e0 discipline).
     e0 = edges.select(
         F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
-    ).distinct().localCheckpoint(eager=True)
-    nodes = (
-        e0.select(F.col("src").alias("node"))
-        .unionByName(e0.select(F.col("dst").alias("node")))
-        .distinct()
-    )
-    out_w = e0.groupBy("src").agg(F.count(F.lit(1)).alias("out_deg"))
-    e = e0.join(out_w, "src").localCheckpoint(eager=True)
+    ).distinct()
     s = seeds.select(F.col(seed_col).alias("node")).distinct()
-    nodes = (
-        nodes.join(s.withColumn("__is_seed", F.lit(1)), "node", "left")
-        .withColumn("__is_seed", F.coalesce(F.col("__is_seed"), F.lit(0)))
-        .localCheckpoint(eager=True)
-    )
-    # The raw-edge checkpoint is dead once both derived checkpoints
-    # (the share-join edge table and the seed-tagged node table) exist.
-    release_local_checkpoint(e0)
-    n_seeds = nodes.agg(F.sum("__is_seed")).collect()[0][0] or 0
-    if n_seeds == 0:
-        raise ValueError("personalized_pagerank needs >= 1 seed present in the graph")
-    base = (100 - damping_pct) * ONE // 100 // n_seeds
-    init = ONE // n_seeds
-    ranks = nodes.select(
-        "node",
-        (F.col("__is_seed") * F.lit(init)).cast("bigint").alias("rank_fp"),
-    )
-    holder: DataFrame | None = None
-    for _ in range(n_iter):
-        r_side = ranks.withColumnRenamed("node", "src")
-        contrib = (
-            e.join(F.broadcast(r_side) if broadcast_ranks else r_side, "src")
-            .select(
-                F.col("dst").alias("node"),
-                F.expr("rank_fp div out_deg").alias("give"),
-            )
-        )
-        summed = contrib.groupBy("node").agg(F.sum("give").alias("got"))
-        ranks = (
-            nodes.join(summed, "node", "left")
-            .select(
-                "node",
-                (
-                    F.col("__is_seed") * F.lit(base)
-                    + F.expr(f"coalesce(got, 0L) * {damping_pct} div 100")
-                ).cast("bigint").alias("rank_fp"),
-            )
-            .localCheckpoint(eager=True)
-        )
-        if holder is not None:
-            release_local_checkpoint(holder)
-        holder = ranks
-    release_local_checkpoint(e)
-    if holder is not None:
-        release_local_checkpoint(nodes)
-    return ranks
+    return _rank_walk(e0, s, n_iter, damping_pct)
 
 
 def personalized_pagerank_sql(
@@ -1043,7 +985,7 @@ def scc_labels(
             return cur.union(step).distinct()
 
         return fixpoint(
-            nodes.withColumn("reach", F.col("node")), hop, n_hops, monotone=True
+            nodes.withColumn("reach", F.col("node")), hop, n_hops, F.count(F.lit(1))
         )
 
     # The forward and backward sweeps are INDEPENDENT job chains until
@@ -1151,7 +1093,7 @@ def sssp_weighted(
 
     # a cost can still fall after the reached set stops growing, so a
     # repeated count is no fixpoint here
-    dist = fixpoint(dist, relax, n_sweeps, monotone=False)
+    dist = fixpoint(dist, relax, n_sweeps)
     return dist.select(F.col("node").cast("bigint").alias("node"), "cost")
 
 
@@ -1539,7 +1481,7 @@ def dag_layers(
 
     # every node is present from the start and only its layer changes,
     # so the row count never moves and cannot signal a fixpoint
-    layer = fixpoint(layer, sweep, n_sweeps, monotone=False)
+    layer = fixpoint(layer, sweep, n_sweeps)
     return layer.select(F.col("node").cast("bigint").alias("node"), "layer")
 
 
@@ -1704,7 +1646,7 @@ def _probe_distances(
         .distinct()
         .select("s", F.col("s").alias("node"), F.lit(0).cast("bigint").alias("hops"))
     )
-    return fixpoint(dist, hop, n_hops, monotone=True)
+    return fixpoint(dist, hop, n_hops, F.count(F.lit(1)))
 
 
 def eccentricity_probes(

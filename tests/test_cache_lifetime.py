@@ -17,6 +17,7 @@ from pyspark import inheritable_thread_target
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
+from cosmos_xenna_spark.operators.bpe import bpe_train
 from cosmos_xenna_spark.operators.cache import _checkpoint_rdd, fixpoint
 from cosmos_xenna_spark.operators.dedup import (
     connected_components,
@@ -119,6 +120,59 @@ def test_connected_components_derived_frames_survive_handle_gc(spark):
     assert derived.count() == 9
 
 
+def _chain_and_clique(spark):
+    """A 16-chain plus a 4-clique: several pointer-jumping rounds."""
+    return spark.createDataFrame(
+        [Row(doc_a=i, doc_b=i + 1) for i in range(16)]
+        + [Row(doc_a=100 + i, doc_b=100 + j) for i in range(4) for j in range(i + 1, 4)]
+    )
+
+
+_CHAIN_AND_CLIQUE = {**{i: 0 for i in range(17)}, **{100 + i: 100 for i in range(4)}}
+
+
+def _clusters(df) -> dict[int, int]:
+    return {r.doc_id: r.cluster_id for r in df.collect()}
+
+
+def test_connected_components_runs_one_job_per_round(spark, job_meter):
+    """The stop signal rides each round's checkpoint job: one job for the
+    edge table and one per label round, no per-round witness job."""
+    pairs = _chain_and_clique(spark)
+    out, jobs, taken = job_meter(lambda: connected_components(pairs, max_iter=15))
+    assert 2 < len(taken) < 15, "expected several rounds and an early exit"
+    assert jobs == len(taken)
+    assert _clusters(out) == _CHAIN_AND_CLIQUE
+
+
+def test_connected_components_early_exit_matches_full_rounds(spark, job_meter):
+    """Stopping at the first repeated label sum returns the rows of a run
+    whose ``max_iter`` leaves no round to spare (so it never exits early)."""
+    pairs = _chain_and_clique(spark)
+    early, _, taken = job_meter(lambda: connected_components(pairs, max_iter=40))
+    # the edge table, then rounds 1..r; round r repeats round r - 1
+    rounds = len(taken) - 1
+    full, _, full_taken = job_meter(
+        lambda: connected_components(pairs, max_iter=rounds - 1)
+    )
+    # rounds 1..r-2 checkpointed, round r-1 returned lazily
+    assert len(full_taken) == 1 + rounds - 2
+    assert _clusters(early) == _clusters(full) == _CHAIN_AND_CLIQUE
+
+
+def test_bpe_train_releases_its_checkpoints(spark):
+    """bpe_train returns a list, so no symbol-table checkpoint it made,
+    the initial one included, may stay pinned."""
+    base = _ids(spark)
+    docs = spark.createDataFrame(
+        [(0, "low low low low low lower lower"), (1, "newest newest newest widest widest")],
+        "doc_id long, text string",
+    )
+    merges = bpe_train(docs, n_merges=12, min_pair_count=2)
+    assert len(merges) >= 8  # at least two checkpoints after the initial one
+    assert not (_ids(spark) - base), "bpe_train left checkpoints pinned"
+
+
 def _grow(limit: int):
     """A grow-only toy step: ``{0..i}`` becomes ``{0..min(i + 1, limit - 1)}``,
     so from ``{0}`` the state stops changing after ``limit - 1`` steps."""
@@ -138,7 +192,7 @@ def test_fixpoint_count_rides_the_checkpoint_job(spark, job_meter):
     """One Spark job per checkpointed step: the row count behind the
     early exit comes from the checkpoint action, not a count() job."""
     out, jobs, taken = job_meter(
-        lambda: fixpoint(spark.range(1), _grow(4), 10, monotone=True)
+        lambda: fixpoint(spark.range(1), _grow(4), 10, F.count(F.lit(1)))
     )
     # {0} {0,1} {0,1,2} {0..3} {0..3}: the fifth count repeats the fourth
     assert len(taken) == 5
@@ -148,10 +202,10 @@ def test_fixpoint_count_rides_the_checkpoint_job(spark, job_meter):
 
 def test_fixpoint_early_exit_matches_full_run(spark, job_meter):
     early, _, early_ckpts = job_meter(
-        lambda: fixpoint(spark.range(1), _grow(4), 10, monotone=True)
+        lambda: fixpoint(spark.range(1), _grow(4), 10, F.count(F.lit(1)))
     )
     full, _, full_ckpts = job_meter(
-        lambda: fixpoint(spark.range(1), _grow(4), 10, monotone=False)
+        lambda: fixpoint(spark.range(1), _grow(4), 10)
     )
     assert len(early_ckpts) == 5  # stops at the first repeated count
     assert len(full_ckpts) == 10  # one checkpoint before each step
@@ -160,7 +214,7 @@ def test_fixpoint_early_exit_matches_full_run(spark, job_meter):
 
 def test_fixpoint_releases_superseded_checkpoints(spark, job_meter):
     out, _, taken = job_meter(
-        lambda: fixpoint(spark.range(1), _grow(6), 4, monotone=False)
+        lambda: fixpoint(spark.range(1), _grow(6), 4)
     )
     ids = [_checkpoint_rdd(df).id() for df in taken]
     pinned = _ids(spark)
@@ -174,7 +228,7 @@ def test_fixpoint_releases_superseded_checkpoints(spark, job_meter):
 
 def test_fixpoint_on_two_threads_matches_sequential(spark):
     def run(limit):
-        return _rows(fixpoint(spark.range(1), _grow(limit), 8, monotone=True))
+        return _rows(fixpoint(spark.range(1), _grow(limit), 8, F.count(F.lit(1))))
 
     sequential = {3: run(3), 5: run(5)}
     threaded: dict[int, list[int]] = {}

@@ -115,6 +115,17 @@ def test_connected_components_long_chain_converges(spark):
     assert {r.cluster_id for r in rows} == {0}
 
 
+def test_connected_components_rejects_non_integer_ids(spark):
+    """The stop signal is an exact sum of labels, so ids must be integers."""
+    import pytest
+
+    from cosmos_xenna_spark.operators.dedup import connected_components
+
+    pairs = spark.createDataFrame([("a", "b")], "doc_a string, doc_b string")
+    with pytest.raises(TypeError):
+        connected_components(pairs)
+
+
 def test_connected_components_reliable_checkpoint_identical(spark, tmp_path):
     """reliable_checkpoint=True (durable checkpoint dir — survives
     executor loss on long 100 TB runs) must produce the same clusters

@@ -4,6 +4,7 @@ tiny graphs, mass conservation, and partitioning invariance."""
 from __future__ import annotations
 
 import pytest
+from pyspark.sql import functions as F
 
 from cosmos_xenna_spark.operators.graph import ONE, k_core, pagerank_fixed, scc_labels
 
@@ -338,6 +339,24 @@ def test_personalized_pagerank_matches_python(spark):
         }
     assert got == rank
     assert got[100] == 0 and got[101] == 0  # unreachable: exactly zero
+
+
+def test_personalized_pagerank_all_seeds_is_pagerank(spark):
+    """With every node a seed the teleport weight is 1 everywhere, so the
+    walk is plain PageRank, row for row."""
+    from cosmos_xenna_spark.operators.graph import personalized_pagerank
+
+    import random
+
+    rng = random.Random(7)
+    e = spark.createDataFrame(
+        [(rng.randrange(15), rng.randrange(15)) for _ in range(50)], "src long, dst long"
+    ).filter("src <> dst")
+    seeds = e.select(F.col("src").alias("node")).union(e.select("dst"))
+    ppr = sorted(map(tuple, personalized_pagerank(e, seeds, n_iter=4).collect()))
+    pr = sorted(map(tuple, pagerank_fixed(e, n_iter=4).collect()))
+    assert ppr == pr
+    assert len({r for _, r in pr}) > 3  # not a uniform toy graph
 
 
 def test_personalized_pagerank_requires_seed(spark):
