@@ -157,7 +157,9 @@ def fixpoint(
     observed value means an equal state, so that every remaining step
     would recompute it unchanged: ``F.count(F.lit(1))`` for a grow-only
     or shrink-only row set, an exact sum for a column no step ever
-    increases over a fixed key set. Each step gets a fresh unnamed
+    increases over a fixed key set, and a struct of both for a grow-only
+    key set whose column never rises (the count fixes the keys, then the
+    sum fixes the values). Each step gets a fresh unnamed
     ``Observation`` so loops on concurrent driver threads never share
     one.
     """

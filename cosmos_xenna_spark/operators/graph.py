@@ -1091,9 +1091,15 @@ def sssp_weighted(
         ).select(F.col("dst").alias("node"), (F.col("cost") + F.col("w")).alias("cost"))
         return dist.union(step).groupBy("node").agg(F.min("cost").alias("cost"))
 
-    # a cost can still fall after the reached set stops growing, so a
-    # repeated count is no fixpoint here
-    dist = fixpoint(dist, relax, n_sweeps)
+    # a cost can still fall after the reached set stops growing, so the
+    # signal pairs the count with the exact cost sum: the reached set only
+    # grows and no cost ever rises, so an equal pair means an equal table
+    dist = fixpoint(
+        dist,
+        relax,
+        n_sweeps,
+        F.struct(F.count(F.lit(1)), F.sum(F.col("cost").cast("decimal(38,0)"))),
+    )
     return dist.select(F.col("node").cast("bigint").alias("node"), "cost")
 
 

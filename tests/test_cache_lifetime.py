@@ -24,6 +24,7 @@ from cosmos_xenna_spark.operators.dedup import (
     jaccard_verify_pairs,
     ngram_jaccard_pairs,
 )
+from cosmos_xenna_spark.operators.graph import sssp_weighted
 
 
 def _ids(spark) -> set[int]:
@@ -158,6 +159,30 @@ def test_connected_components_early_exit_matches_full_rounds(spark, job_meter):
     # rounds 1..r-2 checkpointed, round r-1 returned lazily
     assert len(full_taken) == 1 + rounds - 2
     assert _clusters(early) == _clusters(full) == _CHAIN_AND_CLIQUE
+
+
+def test_sssp_weighted_early_exit_matches_full_sweeps(spark, job_meter):
+    """Stopping at the first repeated (count, cost sum) returns the rows of
+    a run whose ``n_sweeps`` leaves no sweep to spare. The graph is a
+    1-weight chain 0 -> ... -> 6 with shortcuts 0 -> 5 (50) and 0 -> 6
+    (100): every node is reached after 4 sweeps, then the costs of 5 and
+    6 fall in sweeps 5 and 6, so a row count alone would stop too early."""
+    edges = spark.createDataFrame(
+        [(i, i + 1, 1) for i in range(6)] + [(0, 5, 50), (0, 6, 100)],
+        "src long, dst long, w long",
+    )
+    seeds = spark.createDataFrame([(0,)], "node long")
+
+    def dist(df):
+        return {r.node: r.cost for r in df.collect()}
+
+    early, _, taken = job_meter(lambda: sssp_weighted(edges, seeds, n_sweeps=20))
+    full, _, full_taken = job_meter(lambda: sssp_weighted(edges, seeds, n_sweeps=6))
+    # the edge table, then the tables after sweeps 0..7; 7 repeats 6
+    assert len(taken) == 1 + 8
+    # the edge table, then sweeps 0..5 checkpointed; sweep 6 returned lazily
+    assert len(full_taken) == 1 + 6
+    assert dist(early) == dist(full) == {i: i for i in range(7)}
 
 
 def test_bpe_train_releases_its_checkpoints(spark):
