@@ -33,14 +33,6 @@ def distribute_file(spark: SparkSession, uri: str) -> str:
     return os.path.basename(uri)
 
 
-def distribute_archive(spark: SparkSession, uri: str) -> str:
-    """Ship + auto-unpack a tar/zip on every executor (reference unpack
-    semantics). Returns the archive basename (also the unpack dir name
-    under the executor's SparkFiles root)."""
-    spark.sparkContext.addArchive(uri)
-    return os.path.basename(uri)
-
-
 def artifact_path(name: str) -> str:
     """Executor-side: absolute local path of a distributed artifact.
     Call from inside stage/UDF code."""

@@ -72,10 +72,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {t: load_table(spark, sf_dir, t) for t in TABLES}
-
-
 def register_views(spark: SparkSession, sf_dir: str) -> None:
     """Register every table as a temp view (for the SQL API surface)."""
     for t in TABLES:

@@ -221,13 +221,3 @@ def format_pipeline_snapshot(
         f"spill: {total['spill_bytes']:,} B\n"
     )
     return f"{head}\nCluster Resources:\n{resource_tbl}\n\nOperator state:\n{stage_tbl}"
-
-
-def print_pipeline_report(df: DataFrame) -> str:
-    """Execute ``df`` and print + return the formatted snapshot — the
-    one-call equivalent of the reference's periodic monitor tick for a
-    batch pipeline."""
-    metrics = query_metrics(df)
-    report = format_pipeline_snapshot(df.sparkSession, metrics)
-    print(report)
-    return report

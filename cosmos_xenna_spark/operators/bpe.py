@@ -10,7 +10,7 @@ bounded (even web-scale corpora have ~10^7 distinct words), thousands
 of times smaller than the corpus.  Per iteration: one vocab-sized
 aggregation for pair counts, a driver-side argmax (a single row), and
 a row-local symbol rewrite.  The evolving symbol table is eagerly
-``localCheckpoint``-ed every few rounds — the rewrite expression would
+checkpointed every few rounds — the rewrite expression would
 otherwise nest once per merge and blow up the analyzer (the
 connected-components lineage lesson).
 
@@ -31,7 +31,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from cosmos_xenna_spark.operators.cache import release_local_checkpoint
+from cosmos_xenna_spark.operators.cache import checkpoint, release_local_checkpoint
 
 EOW = "</w>"
 # Merges between symbol-table checkpoints: each merge nests one more
@@ -101,7 +101,7 @@ def bpe_train(
     list in rank order.  Stops early when no pair reaches
     ``min_pair_count``.  The result is a Python list, so every symbol
     table checkpoint this makes is released before it returns."""
-    symtab = _initial_symbols(word_frequencies(docs, text_col)).localCheckpoint(eager=True)
+    symtab = checkpoint(_initial_symbols(word_frequencies(docs, text_col)))
     held = symtab  # the checkpoint the current symbol table plans against
     merges: list[tuple[str, str]] = []
     try:
@@ -118,7 +118,7 @@ def bpe_train(
             merges.append((left, right))
             symtab = _apply_merge(symtab, left, right)
             if (i + 1) % CHECKPOINT_EVERY == 0:
-                symtab = symtab.localCheckpoint(eager=True)
+                symtab = checkpoint(symtab)
                 release_local_checkpoint(held)
                 held = symtab
     finally:

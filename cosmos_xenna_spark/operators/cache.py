@@ -33,11 +33,24 @@ the result DataFrame handed back to the caller:
   original handle dies. Only release state that is provably
   superseded; leave the final checkpoint to the JVM's ContextCleaner.
 - :func:`fixpoint` is the iterative loop built on the two checkpoint
-  helpers: :func:`checkpoint` the state (local or reliable, the one
-  place that choice is made), release the checkpoint it supersedes,
-  step. Its optional stop signal is an aggregate observed on each
-  checkpoint's own job; stopping when the value repeats is sound only
-  when an equal observed value means an equal state.
+  helpers: :func:`checkpoint` the state, release the checkpoint it
+  supersedes, step. Its optional stop signal is an aggregate observed
+  on each checkpoint's own job; stopping when the value repeats is
+  sound only when an equal observed value means an equal state.
+
+Every eager checkpoint in the package goes through :func:`checkpoint`,
+and it is the one place that picks the kind. When the SparkContext has
+a checkpoint directory (``sc.setCheckpointDir``), checkpoints are
+reliable: written to that directory, they survive the loss of the
+executor that computed them. Without one they are local: kept in the
+executors' block managers, cheaper, but gone with their executor, and
+a consumer of a lost block fails instead of recomputing. This is Spark
+MLlib's ``checkpointInterval`` rule; the directory is the switch, there
+is no option. :func:`release_local_checkpoint` does nothing to a
+reliable checkpoint (its RDD is not persisted), so release discipline
+is the same for both kinds; reliable checkpoint files stay in the
+directory unless ``spark.cleaner.referenceTracking.cleanCheckpoints``
+is on.
 
 All releases are best-effort and non-blocking: at interpreter shutdown
 the JVM gateway may already be gone, and a failed unpersist just means
@@ -122,15 +135,12 @@ def release_local_checkpoint(df: DataFrame) -> None:
             pass
 
 
-def checkpoint(df: DataFrame, *, reliable: bool = False) -> DataFrame:
-    """Eagerly checkpoint ``df``: ``localCheckpoint`` by default, or a
-    reliable ``checkpoint`` into the context's checkpoint directory.
-
-    The one place that picks the checkpoint kind. Local checkpoints
-    live in executor block managers and die with their executor;
-    reliable ones survive it at the cost of a write to durable storage.
-    """
-    return df.checkpoint(eager=True) if reliable else df.localCheckpoint(eager=True)
+def checkpoint(df: DataFrame) -> DataFrame:
+    """Eagerly checkpoint ``df``: reliably into the context's checkpoint
+    directory when one is set, ``localCheckpoint`` otherwise."""
+    if df.sparkSession.sparkContext.getCheckpointDir() is not None:
+        return df.checkpoint(eager=True)
+    return df.localCheckpoint(eager=True)
 
 
 def fixpoint(
@@ -138,17 +148,13 @@ def fixpoint(
     step: Callable[[DataFrame], DataFrame],
     n_steps: int,
     signal: Column | None = None,
-    *,
-    reliable: bool = False,
 ) -> DataFrame:
     """Apply ``step`` ``n_steps`` times, checkpointing before each step.
 
-    Each step's input is an eager :func:`checkpoint` (``reliable``
-    picks the kind), so the plan stays linear in ``n_steps``. Each new
-    local checkpoint releases the one it supersedes; the final one is
-    left to the ContextCleaner, and reliable checkpoints are never
-    released. After ``n_steps`` steps the last step's frame is returned
-    lazily.
+    Each step's input is an eager :func:`checkpoint`, so the plan stays
+    linear in ``n_steps``. Each new checkpoint releases the one it
+    supersedes; the final one is left to the ContextCleaner. After
+    ``n_steps`` steps the last step's frame is returned lazily.
 
     ``signal`` is an aggregate over the state, observed on each
     checkpoint's own job. Without it every step runs. With it the loop
@@ -169,8 +175,8 @@ def fixpoint(
         if signal is not None:
             seen = Observation()
             state = state.observe(seen, signal.alias("v"))
-        state = checkpoint(state, reliable=reliable)
-        if prev is not None and not reliable:
+        state = checkpoint(state)
+        if prev is not None:
             release_local_checkpoint(prev)
         prev = state
         if signal is not None:

@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from cosmos_xenna_spark.functions import md5_long63, md5_long63_sql
+from cosmos_xenna_spark.operators.cache import checkpoint
 
 DEPTH = 4
 WIDTH = 256
@@ -49,10 +50,9 @@ def cms_frequency_eval(
     toks = docs.select(
         F.explode(F.split(F.col(text_col), " ")).alias("tok")
     ).filter(F.col("tok") != "")
-    counts = (
+    counts = checkpoint(
         toks.groupBy("tok")
         .agg(F.count(F.lit(1)).alias("cnt"))
-        .localCheckpoint(eager=True)
     )
     # sketch: hash each DISTINCT token into DEPTH cells, sum counts
     hashed = counts.select(

@@ -34,6 +34,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from cosmos_xenna_spark.functions import md5_long63
+from cosmos_xenna_spark.operators.cache import checkpoint
 
 
 def domain_cap(
@@ -728,14 +729,13 @@ def dsir_weights(
     # derive from it, and without materialization the totals branch
     # re-executes the ENTIRE corpus explode+aggregate (a third corpus
     # scan for a 1024-row reduction — caught in PLANS.json review).
-    counts = (
+    counts = checkpoint(
         buckets(docs)
         .groupBy("bucket")
         .agg(
             F.count(F.lit(1)).alias("raw_n"),
             F.sum("is_tgt").alias("tgt_n"),
         )
-        .localCheckpoint(eager=True)
     )
     # totals attach as a SINGLE-ROW broadcast (the heavy-hitters /
     # modularity ledger pattern — allowlisted BNLJ: the broadcast side
@@ -955,7 +955,7 @@ def greedy_max_coverage(
         F.col(id_col).cast("bigint").alias("__id"),
         F.split(F.col(text_col), " ").alias("__ws"),
     )
-    toks = (
+    toks = checkpoint(
         base.filter(F.size("__ws") >= 2)
         .select(
             "__id",
@@ -967,9 +967,8 @@ def greedy_max_coverage(
             ).alias("__tok"),
         )
         .distinct()
-        .localCheckpoint(eager=True)
     )
-    cand = toks.select("__id").distinct().localCheckpoint(eager=True)
+    cand = checkpoint(toks.select("__id").distinct())
 
     chosen: list[int] = []
     rows: list[tuple[int, int, int, int]] = []

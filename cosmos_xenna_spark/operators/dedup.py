@@ -296,7 +296,6 @@ def connected_components(
     src_col: str = "doc_a",
     dst_col: str = "doc_b",
     max_iter: int = 25,
-    reliable_checkpoint: bool = False,
 ) -> DataFrame:
     """Duplicate clusters from candidate pairs: (doc_id, cluster_id).
 
@@ -321,15 +320,6 @@ def connected_components(
     changed. The sum is observed on the round's own checkpoint job.
     Ids must be integers (the sum is taken as ``decimal(38,0)``, which
     cannot overflow).
-
-    ``reliable_checkpoint=True`` uses ``df.checkpoint()`` against
-    ``spark.sparkContext.setCheckpointDir(...)`` (the caller must have
-    set one — typically durable storage) instead of ``localCheckpoint``:
-    executor-local checkpoints die with their executor, so on a
-    multi-hour 100 TB run a single lost node (or driver restart with
-    cluster-mode recovery) replays the entire iteration history. Local
-    is the right default for interactive/test runs — no durable-store
-    round-trip per iteration.
     """
     for c in (src_col, dst_col):
         if not isinstance(pairs.schema[c].dataType, IntegralType):
@@ -369,8 +359,7 @@ def connected_components(
             ).alias("__e")
         )
         .select("__e.src", "__e.dst")
-        .repartition(F.col("src")),
-        reliable=reliable_checkpoint,
+        .repartition(F.col("src"))
     )
     if max_iter < 1:  # degenerate contract: zero rounds = self labels
         return edges.select("src").distinct().select(
@@ -406,7 +395,6 @@ def connected_components(
         step,
         max_iter - 1,
         F.sum(F.col("label").cast("decimal(38,0)")),
-        reliable=reliable_checkpoint,
     )
     # Once the loop has converged the result is the final label
     # checkpoint and no longer plans against the edge table, so the
@@ -416,7 +404,7 @@ def connected_components(
     # DERIVED from the result keep planning against its blocks long
     # after the original handle is gone, so its cleanup belongs to the
     # JVM's ContextCleaner (one small label table per call — bounded).
-    if not reliable_checkpoint and _checkpoint_rdd(labels) is not None:
+    if _checkpoint_rdd(labels) is not None:
         release_local_checkpoint(edges)
     return labels.select(F.col("id").alias("doc_id"), F.col("label").alias("cluster_id"))
 
@@ -887,26 +875,6 @@ def _pad_key_sql(order_col: str, value_col: str) -> str:
     the value as tiebreak — identical SQL text works in Spark
     (format_string) and DuckDB (printf) via the shared printf dialect."""
     return f"printf('%020d|%s', {order_col}, CAST({value_col} AS STRING))"
-
-
-def golden_record_sql(
-    table_sql: str,
-    cluster_col: str,
-    best_by: dict[str, str],
-    sum_cols: list[str] | None = None,
-) -> str:
-    fields = ["COUNT(*) AS n_members"]
-    for out_col, order_col in best_by.items():
-        fields.append(
-            f"arg_max({out_col}, {_pad_key_sql(order_col, out_col)}) AS {out_col}"
-        )
-    for c in sum_cols or []:
-        fields.append(f"SUM({c}) AS sum_{c}")
-    return f"""
-    SELECT {cluster_col}, {', '.join(fields)}
-    FROM ({table_sql})
-    GROUP BY {cluster_col}
-    """
 
 
 def minhash_bands_rowlocal(

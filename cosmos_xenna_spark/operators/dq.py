@@ -31,6 +31,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.column import Column
 
+from cosmos_xenna_spark.operators.cache import checkpoint
+
 
 @dataclass(frozen=True)
 class Expectation:
@@ -698,10 +700,9 @@ def _counts_frame(
     (4 scans for t-closeness — the DSIR/KN count-table lesson)."""
     from pyspark.sql import functions as F
 
-    return (
+    return checkpoint(
         df.groupBy(*quasi_cols, F.col(sensitive_col).alias(alias))
         .agg(F.count(F.lit(1)).alias("c"))
-        .localCheckpoint(eager=True)
     )
 
 

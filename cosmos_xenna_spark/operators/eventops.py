@@ -28,6 +28,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from cosmos_xenna_spark.operators.cache import checkpoint
+
 
 def transition_matrix(
     events: DataFrame,
@@ -697,7 +699,7 @@ def audience_overlap_minhash(
     # aggregation executes once, not once per join side, and so the
     # non-equi join's build side is a materialized G-row frame rather
     # than a re-run of the whole upstream plan.
-    sigs = sigs.localCheckpoint(eager=True)
+    sigs = checkpoint(sigs)
     sa = sigs.select(F.col("g").alias("group_a"), *[F.col(f"__s{i}").alias(f"__a{i}") for i in range(n_hashes)])
     sb = sigs.select(F.col("g").alias("group_b"), *[F.col(f"__s{i}").alias(f"__b{i}") for i in range(n_hashes)])
     joined = sa.join(F.broadcast(sb), F.col("group_a") < F.col("group_b"))
@@ -1305,7 +1307,7 @@ def peak_concurrency(
     running = deltas.withColumn("open", F.sum("d").over(w))
     # `running` feeds both the peak aggregation and the first-instant
     # filter; checkpoint so the window sweep runs once
-    running = running.localCheckpoint(eager=True)
+    running = checkpoint(running)
     peak = running.groupBy(*group_cols).agg(F.max("open").alias("peak"))
     first_t = (
         running.join(peak, group_cols)
@@ -1469,7 +1471,7 @@ def rfm_scores(
     day = F.expr(
         f"datediff(CAST({ts_col} AS DATE), DATE '1970-01-01')"
     ).cast("bigint")
-    ent = (
+    ent = checkpoint(
         df.select(
             F.col(entity_col).alias("e"),
             day.alias("d"),
@@ -1487,7 +1489,6 @@ def rfm_scores(
             F.count(F.lit(1)).cast("bigint").alias("n_events"),
             F.sum("cents").cast("bigint").alias("spend_cents"),
         )
-        .localCheckpoint(eager=True)
     )
 
     metrics = [
@@ -1695,7 +1696,7 @@ def interval_iou_pairs(
     ``keep_id < dup_id`` (survivor = lower id, the dedup convention).
     """
     w = int(bucket_width)
-    cells = iv.withColumn(
+    cells = checkpoint(iv.withColumn(
         "__cell",
         F.explode(
             F.sequence(
@@ -1703,7 +1704,7 @@ def interval_iou_pairs(
                 F.floor(F.col(hi_col) / w).cast("long"),
             )
         ),
-    ).localCheckpoint(eager=True)
+    ))
     a = cells.select(
         F.col(key_col).alias("__k"),
         F.col("__cell"),

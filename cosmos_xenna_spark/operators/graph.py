@@ -44,7 +44,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
-from cosmos_xenna_spark.operators.cache import fixpoint, release_local_checkpoint, scoped_persist
+from cosmos_xenna_spark.operators.cache import (
+    checkpoint,
+    fixpoint,
+    release_local_checkpoint,
+    scoped_persist,
+)
 
 SCALE = 12  # fixed-point decimal digits
 ONE = 10**SCALE
@@ -63,7 +68,7 @@ def _sym_undirected_ckpt(
     eager checkpoint. The explode emits the same row multiset from one
     execution.
     """
-    return (
+    return checkpoint(
         edges.select(
             F.explode(
                 F.array(
@@ -79,7 +84,6 @@ def _sym_undirected_ckpt(
         .select("__e.a", "__e.b")
         .filter(F.col("a") != F.col("b"))
         .distinct()
-        .localCheckpoint(eager=True)
     )
 
 
@@ -148,7 +152,7 @@ def _rank_walk(
     # identical subplans — un-materialized, the derivation executed
     # four times across the two eager checkpoints below. After this
     # leaf, those branches are cheap re-reads of resident blocks.
-    e0 = e0.localCheckpoint(eager=True)
+    e0 = checkpoint(e0)
     nodes = (
         e0.select(F.col("src").alias("node"))
         .unionByName(e0.select(F.col("dst").alias("node")))
@@ -179,9 +183,9 @@ def _rank_walk(
     # that is the difference between reading the edge list twice and
     # reading it 56 times. The teleport total T is observed on the
     # node checkpoint's own job.
-    e = e.localCheckpoint(eager=True)
+    e = checkpoint(e)
     seen = Observation()
-    nodes = nodes.observe(seen, F.sum("tw").alias("t")).localCheckpoint(eager=True)
+    nodes = checkpoint(nodes.observe(seen, F.sum("tw").alias("t")))
     # The raw-edge checkpoint is dead once the two derived checkpoints
     # above have materialized. The walk's result plans against `e`,
     # `nodes` and the last rank checkpoint, so those three are left to
@@ -368,7 +372,7 @@ def label_propagation(
     carries more than (neighbor label) payload, and the label table
     stays one row per node.  The symmetrized edge list feeds
     ``n_iter + 1`` plan branches (label init + every sweep), so it is
-    eagerly ``localCheckpoint``-ed — without that the edge subplan
+    eagerly checkpointed — without that the edge subplan
     (often a multi-table join) re-plans and re-executes once per
     branch (the PageRank loop-invariant lesson; the plan budget lint
     caught this at 14 shuffles / 24 parquet scans for 2 sweeps, vs
@@ -728,17 +732,15 @@ def hits_fixed(
     """
     if n_iter < 1:
         raise ValueError("hits_fixed needs n_iter >= 1")
-    e = (
+    e = checkpoint(
         edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
         .filter(F.col("src") != F.col("dst"))
         .distinct()
-        .localCheckpoint(eager=True)
     )
-    nodes = (
+    nodes = checkpoint(
         e.select(F.col("src").alias("node"))
         .unionByName(e.select(F.col("dst").alias("node")))
         .distinct()
-        .localCheckpoint(eager=True)
     )
     # Normalization WITHOUT a driver round-trip: the quantized max
     # divisor rides along as a broadcast 1-row aggregate (a scalar-
@@ -774,11 +776,10 @@ def hits_fixed(
         # step, 12 exchanges per 3-iteration run) is deferred to one
         # zero-fill of the FINAL frames below. Values are bit-identical.
         h_side = hubs.withColumnRenamed("node", "src")
-        a_raw = (
+        a_raw = checkpoint(
             e.join(F.broadcast(h_side), "src")
             .groupBy(F.col("dst").alias("node"))
             .agg(F.sum("h").alias("raw"))
-            .localCheckpoint(eager=True)
         )
         # The previous iteration's a_raw checkpoint is dead once this
         # one has materialized (its lazy auths view fed exactly the
@@ -788,11 +789,10 @@ def hits_fixed(
         a_holder = a_raw
         auths = _norm(a_raw, "a")
         a_side = auths.withColumnRenamed("node", "dst")
-        h_raw = (
+        h_raw = checkpoint(
             e.join(F.broadcast(a_side), "dst")
             .groupBy(F.col("src").alias("node"))
             .agg(F.sum("a").alias("raw"))
-            .localCheckpoint(eager=True)
         )
         if h_holder is not None:
             release_local_checkpoint(h_holder)
@@ -962,11 +962,10 @@ def scc_labels(
     distinct.  Reference: cosmos-xenna has no graph ops; this extends
     the Spark-native analytics surface (SURVEY §2.B).
     """
-    e = (
+    e = checkpoint(
         edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
         .filter(F.col("src") != F.col("dst"))
         .distinct()
-        .localCheckpoint(eager=True)
     )
     nodes = (
         e.select(F.col("src").alias("node"))
@@ -1070,7 +1069,7 @@ def sssp_weighted(
     list) with cost = min(cost, prev_cost + w) instead of hop + 1.
     Exact bigint arithmetic — bit-exact vs the unrolled SQL oracle.
     """
-    e = (
+    e = checkpoint(
         edges.select(
             F.col(src_col).alias("src"),
             F.col(dst_col).alias("dst"),
@@ -1079,7 +1078,6 @@ def sssp_weighted(
         .filter(F.col("src") != F.col("dst"))
         .groupBy("src", "dst")
         .agg(F.min("w").alias("w"))
-        .localCheckpoint(eager=True)
     )
     dist = seeds.select(F.col(node_col).alias("node")).distinct().withColumn(
         "cost", F.lit(0).cast("bigint")
@@ -1164,11 +1162,10 @@ def resource_allocation_link_prediction(
     # upstream edge-derivation subplan (an LSH banding chain for the
     # dedup graph) re-executes once per branch (the label-propagation
     # lesson; plan lint caught 23 shuffles / 7 scans here).
-    und = (
+    und = checkpoint(
         edges.select(F.col(src_col).alias("a"), F.col(dst_col).alias("b"))
         .filter(F.col("a") != F.col("b"))
         .distinct()
-        .localCheckpoint(eager=True)
     )
     sym = und.union(und.select(F.col("b").alias("a"), F.col("a").alias("b")))
     deg = sym.groupBy(F.col("a").alias("z")).agg(F.count(F.lit(1)).alias("deg"))
@@ -1264,20 +1261,19 @@ def modularity(
     one label join per edge endpoint, two community-sized
     aggregations, one scalar reduce.
     """
-    und = (
+    und = checkpoint(
         edges.select(F.col(src_col).alias("a"), F.col(dst_col).alias("b"))
         .filter(F.col("a") != F.col("b"))
         .select(
             F.least("a", "b").alias("a"), F.greatest("a", "b").alias("b")
         )
         .distinct()
-        .localCheckpoint(eager=True)
     )
     # labels feed three join branches (both edge endpoints + the degree
     # table); when they come from an ITERATIVE producer (label
     # propagation) the whole sweep subplan would re-execute per branch
     # without this node-sized checkpoint (plan lint: 20 shuffles).
-    labels = labels.localCheckpoint(eager=True)
+    labels = checkpoint(labels)
     la = labels.select(
         F.col(node_col).alias("a"), F.col(label_col).alias("ca")
     )
@@ -1390,12 +1386,11 @@ def degree_assortativity(
     the oracle — float SUMS never cross engines, the final expression
     does.  Returns a single row ``(n_edge_ends, r_corr)``.
     """
-    und = (
+    und = checkpoint(
         edges.select(F.col(src_col).alias("a"), F.col(dst_col).alias("b"))
         .filter(F.col("a") != F.col("b"))
         .select(F.least("a", "b").alias("a"), F.greatest("a", "b").alias("b"))
         .distinct()
-        .localCheckpoint(eager=True)
     )
     sym = und.union(und.select(F.col("b").alias("a"), F.col("a").alias("b")))
     deg = sym.groupBy(F.col("a").alias("v")).agg(
@@ -1466,11 +1461,10 @@ def dag_layers(
     longest walk — still deterministic, but use :func:`scc_labels` to
     collapse cycles first.
     """
-    e = (
+    e = checkpoint(
         edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
         .filter(F.col("src") != F.col("dst"))
         .distinct()
-        .localCheckpoint(eager=True)
     )
     layer = (
         e.select(F.col("src").alias("node"))
@@ -1543,12 +1537,11 @@ def clustering_coefficient(
     ``triangles = NULL`` rather than silently dropped.  Degree-1
     nodes have no wedges and report ``cc_ppm = NULL``.
     """
-    und = (
+    und = checkpoint(
         edges.select(F.col(src_col).alias("a"), F.col(dst_col).alias("b"))
         .filter(F.col("a") != F.col("b"))
         .select(F.least("a", "b").alias("a"), F.greatest("a", "b").alias("b"))
         .distinct()
-        .localCheckpoint(eager=True)
     )
     sym = und.union(und.select(F.col("b").alias("a"), F.col("a").alias("b")))
     deg = sym.groupBy(F.col("a").alias("v")).agg(F.count(F.lit(1)).alias("deg"))
@@ -1829,14 +1822,13 @@ def jaccard_link_prediction(
     # orientation rule): an edge present as both (3,7) and (7,3) must
     # collapse to ONE undirected edge, or sym double-counts it and
     # every degree/common-neighbor stat drifts by the duplicate count
-    und = (
+    und = checkpoint(
         edges.select(
             F.least(F.col(src_col), F.col(dst_col)).alias("a"),
             F.greatest(F.col(src_col), F.col(dst_col)).alias("b"),
         )
         .filter(F.col("a") != F.col("b"))
         .distinct()
-        .localCheckpoint(eager=True)
     )
     sym = und.union(und.select(F.col("b").alias("a"), F.col("a").alias("b")))
     deg_all = sym.groupBy(F.col("a").alias("z")).agg(

@@ -40,6 +40,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from cosmos_xenna_spark.functions import md5_long63, md5_long63_sql
+from cosmos_xenna_spark.operators.cache import checkpoint
 
 ALPHA_E6 = 718273  # 0.7213 / (1 + 1.079/256), scaled 1e6 — shared constant
 M = 256  # 2^8 buckets
@@ -139,9 +140,7 @@ def hll_rollup(
     along as the accuracy eval (drop it in production — it is the
     expensive column; the sketch is the cheap one).
     """
-    hashed = register_frame(df, group_col, entity_col).localCheckpoint(
-        eager=True
-    )
+    hashed = checkpoint(register_frame(df, group_col, entity_col))
     regs_g = hashed.groupBy("scope", "bucket").agg(F.max("rho").alias("r"))
     regs_all = regs_g.groupBy("bucket").agg(F.max("r").alias("r")).select(
         F.lit(all_label).alias("scope"), "bucket", "r"

@@ -37,6 +37,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from cosmos_xenna_spark.functions import md5_long63, md5_long63_sql
+from cosmos_xenna_spark.operators.cache import checkpoint
 
 _HASH_SPACE = float(1 << 60)  # md5_long63 is 15 hex digits < 2^60
 
@@ -52,18 +53,17 @@ def _kmv_pair_base(
         md5_long63(F.col(entity_col).cast("string")).alias("h"),
     ).distinct()
     w = Window.partitionBy("g").orderBy(F.asc("h"))
-    sig = (
+    sig = checkpoint(
         eg.withColumn("__r", F.row_number().over(w))
         .filter(F.col("__r") <= k)
         .select("g", "h")
-        .localCheckpoint(eager=True)
     )
     counts = eg.groupBy("g").agg(F.count(F.lit(1)).cast("bigint").alias("n"))
-    groups = counts.localCheckpoint(eager=True)
+    groups = checkpoint(counts)
     # one BNLJ builds the pair spine; the eager checkpoint keeps the
     # three downstream consumers (two merge branches + the final
     # attach) from re-planning the non-equi join each time
-    pairs = (
+    pairs = checkpoint(
         groups.select(F.col("g").alias("ga"), F.col("n").alias("n_a"))
         .join(
             F.broadcast(
@@ -71,7 +71,6 @@ def _kmv_pair_base(
             ),
             F.col("ga") < F.col("gb"),
         )
-        .localCheckpoint(eager=True)
     )
     merged = pairs.join(
         sig.select(F.col("g").alias("ga"), "h"), "ga"
@@ -240,7 +239,7 @@ def kmv_anotb(
     # th and pairs are G^2-row frames BY CONSTRUCTION (one row per
     # group pair — the audience-overlap contract): broadcast them into
     # every counting join so the only exchanges left are the group-bys
-    th = th.localCheckpoint(eager=True)
+    th = checkpoint(th)
 
     def below(side: str, out: str) -> DataFrame:
         return (

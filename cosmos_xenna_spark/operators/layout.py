@@ -17,6 +17,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from cosmos_xenna_spark.operators.cache import checkpoint
+
 
 def zorder_key(cols: list[str], bits: int = 16) -> Column:
     """Morton-interleave the low ``bits`` of each column into one
@@ -266,21 +268,20 @@ def bloom_skipping_eval(
     from cosmos_xenna_spark.functions import md5_long63
 
     spark = df.sparkSession
-    filed = df.select(
+    filed = checkpoint(df.select(
         F.expr(f"CAST({id_col} AS BIGINT) div {int(rows_per_file)}").alias("f"),
         F.col(key_col).cast("bigint").alias("k"),
-    ).localCheckpoint(eager=True)
+    ))
     stats = filed.groupBy("f").agg(
         F.min("k").alias("kmin"), F.max("k").alias("kmax")
     )
     bit = lambda i, c: md5_long63(  # noqa: E731
         F.col(c).cast("string"), prefix=f"b{i}|"
     ) % _BLOOM_M
-    bits = (
+    bits = checkpoint(
         filed.select("f", bit(0, "k").alias("b"))
         .unionByName(filed.select("f", bit(1, "k").alias("b")))
         .distinct()
-        .localCheckpoint(eager=True)
     )
     probes = spark.createDataFrame(
         [(int(p),) for p in probe_keys], "pk long"

@@ -42,6 +42,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from cosmos_xenna_spark.operators.cache import checkpoint
+
 _MAGIC = b"FAKEIMG1"
 
 
@@ -981,9 +983,9 @@ def image_hash_pairs(
     # exact-pair self-join plus the cluster rollup, and its upstream is
     # the full decode -> ahash mapInPandas pass — without this the
     # image corpus is decoded once per consumer (3.4x on the bench).
-    sig = hashes.select(
+    sig = checkpoint(hashes.select(
         F.col(id_col).alias("doc_id"), F.col(hash_col).alias("h")
-    ).localCheckpoint(eager=True)
+    ))
     clusters = sig.groupBy("h").agg(
         F.array_sort(F.collect_list("doc_id")).alias("ids")
     )

@@ -28,6 +28,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from cosmos_xenna_spark.functions import md5_long63
+from cosmos_xenna_spark.operators.cache import checkpoint
 from cosmos_xenna_spark.operators.text import STOPWORDS
 
 # Gopher-ish acceptance thresholds, tuned for the synthetic corpus
@@ -964,10 +965,9 @@ def kneser_ney_bigram(
     # and the type total BOTH derive from it, and without
     # materialization the n1t branch re-executes the corpus explode
     # (a second full scan for a COUNT(*) over the vocab frame).
-    counts = (
+    counts = checkpoint(
         pairs.groupBy("w1", "w2")
         .agg(F.count(F.lit(1)).alias("n"))
-        .localCheckpoint(eager=True)
     )
     w1win = Window.partitionBy("w1")
     w2win = Window.partitionBy("w2")
@@ -1447,16 +1447,15 @@ def roc_auc(
     """
     from cosmos_xenna_spark.operators.ranking import global_cumsum
 
-    vals = (
+    # global_cumsum runs approxQuantile + a count pass + the main
+    # job: checkpoint the tiny value frame so the corpus-sized
+    # scoring subplan executes ONCE, not once per internal pass
+    vals = checkpoint(
         scored.groupBy(F.col(score_col).alias("__s"))
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("__cnt"),
             F.sum(F.col(label_col).cast("bigint")).cast("bigint").alias("__pos"),
         )
-        # global_cumsum runs approxQuantile + a count pass + the main
-        # job: checkpoint the tiny value frame so the corpus-sized
-        # scoring subplan executes ONCE, not once per internal pass
-        .localCheckpoint(eager=True)
     )
     vals = global_cumsum(vals, "__cnt", ["__s"], out_col="__cum")
     out = vals.agg(
@@ -1534,11 +1533,11 @@ def gains_table(
     """
     from cosmos_xenna_spark.operators.ranking import global_row_number
 
-    keyed = scored.select(
+    keyed = checkpoint(scored.select(
         (-F.col(score_col).cast("bigint")).alias("__negs"),
         F.col(id_col).alias("__id"),
         F.col(label_col).cast("bigint").alias("__y"),
-    ).localCheckpoint(eager=True)
+    ))
     # ^ global_row_number makes three passes (quantiles, bucket counts,
     # rank job); the checkpoint pins the 3-column projection so the
     # upstream scoring explode runs once
@@ -1644,12 +1643,12 @@ def qini_table(
     """
     from cosmos_xenna_spark.operators.ranking import global_row_number
 
-    keyed = scored.select(
+    keyed = checkpoint(scored.select(
         (-F.col(score_col).cast("bigint")).alias("__negs"),
         F.col(id_col).alias("__id"),
         F.col(variant_col).cast("bigint").alias("__v"),
         F.col(convert_col).cast("bigint").alias("__c"),
-    ).localCheckpoint(eager=True)
+    ))
     ranked = global_row_number(keyed, ["__negs", "__id"], out_col="__rn")
     tiles = (
         ranked.select(
@@ -1751,14 +1750,14 @@ def conformal_split(
     sort); thresholds are a 2-row broadcast into a single eval
     aggregation.  No floats anywhere.
     """
-    base = scored.select(
+    base = checkpoint(scored.select(
         F.col(id_col).cast("bigint").alias("__id"),
         F.col(score_col).cast("bigint").alias("__s"),
         F.col(label_col).cast("bigint").alias("__y"),
         (F.pmod(F.col(id_col).cast("bigint"), F.lit(int(cal_mod))) == 0).alias(
             "__cal"
         ),
-    ).localCheckpoint(eager=True)
+    ))
 
     nc = "CASE WHEN __y = 1 THEN -__s ELSE __s END"
     cal = base.filter(F.col("__cal")).select(
@@ -1773,7 +1772,7 @@ def conformal_split(
     # the cum frame is bounded (distinct score values per class) and
     # feeds BOTH the per-class total (max cum == n_cal — the corpus is
     # never re-aggregated) and the rank selection, so checkpoint it.
-    cum = vf.withColumn("cum", F.sum("cnt").over(w)).localCheckpoint(eager=True)
+    cum = checkpoint(vf.withColumn("cum", F.sum("cnt").over(w)))
     kframe = (
         cum.groupBy("__y")
         .agg(F.max("cum").cast("bigint").alias("n_cal"))
@@ -1955,10 +1954,10 @@ def label_noise_matrix(
         f"LEAST(1000000, GREATEST(0,"
         f" CAST(({score_col} - {lo}) * 1000000 AS BIGINT) DIV {span}))"
     )
-    base = scored.select(
+    base = checkpoint(scored.select(
         F.col(label_col).cast("bigint").alias("given"),
         F.expr(conf1).cast("bigint").alias("c1"),
-    ).withColumn("c0", F.lit(1_000_000) - F.col("c1")).localCheckpoint(eager=True)
+    ).withColumn("c0", F.lit(1_000_000) - F.col("c1")))
 
     thr = base.groupBy().agg(
         F.expr(
@@ -2110,14 +2109,14 @@ def isotonic_calibration(
         )
     )
     w_ord = Window.orderBy("bin")
-    prefix = bins.select(
+    prefix = checkpoint(bins.select(
         "bin",
         "cnt",
         "pos",
         F.row_number().over(w_ord).cast("bigint").alias("k"),
         F.sum("cnt").over(w_ord).cast("bigint").alias("ccnt"),
         F.sum("pos").over(w_ord).cast("bigint").alias("cpos"),
-    ).localCheckpoint(eager=True)  # bounded frame, feeds 3 consumers
+    ))  # bounded frame, feeds 3 consumers
 
     lo_side = prefix.select(
         F.col("k").alias("i"),

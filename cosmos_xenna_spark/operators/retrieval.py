@@ -33,6 +33,7 @@ from operator import or_
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from cosmos_xenna_spark.operators.cache import checkpoint
 from cosmos_xenna_spark.operators.text import TOKEN_REGEX
 
 
@@ -595,7 +596,7 @@ def doc_keywords(
     one vocabulary-sized df aggregation, an equi-join back on term,
     and a per-DOC window top-k (partitioned by doc id — never global).
     """
-    dt = doc_terms(docs, id_col, text_col).localCheckpoint(eager=True)
+    dt = checkpoint(doc_terms(docs, id_col, text_col))
     df_t = dt.groupBy("term").agg(F.count(F.lit(1)).cast("bigint").alias("df"))
     scored = dt.join(df_t, "term").select(
         F.col(id_col),

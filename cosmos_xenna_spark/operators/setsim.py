@@ -22,7 +22,7 @@ Scale shape (100 TB):
   re-exchanged the token stream a second time);
 - global ordering: one doc-keyed rank window over the df-annotated
   stream;
-- the prefix table is ``localCheckpoint``-ed once: it feeds BOTH sides
+- the prefix table is checkpointed once: it feeds BOTH sides
   of the candidate self-join, and an un-checkpointed frame would
   re-execute the 3-shuffle subplan per side (the label-propagation
   lesson, see tests/test_plans.py plan budgets);
@@ -54,6 +54,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from cosmos_xenna_spark.operators.cache import checkpoint
 from cosmos_xenna_spark.operators.dedup import ensure_parallelism
 
 
@@ -104,12 +105,11 @@ def prefix_filter_jaccard_join(
     # materializing the shingle arrays is worse than recomputing them,
     # this is the knob to expose — the r6 Jaccard-verify lesson, but
     # the measured crossover here favors materializing.
-    sets = (
+    sets = checkpoint(
         ensure_parallelism(docs)
         .select(
             F.col(id_col).alias("id"), _shingle_col(text_col, shingle_words).alias("sh")
         )
-        .localCheckpoint(eager=True)
     )
     # n comes free from the MATERIALIZED shingle array (size() on a
     # checkpoint column, no transform re-evaluation and no count
@@ -140,7 +140,7 @@ def prefix_filter_jaccard_join(
     )
     # The prefix frame feeds both sides of the self-join: checkpoint it
     # once so the 2-shuffle build is not re-executed per side.
-    # Repartition BEFORE the checkpoint: an eager localCheckpoint
+    # Repartition BEFORE the checkpoint: an eager checkpoint
     # materializes the AQE-optimized plan, and AQE's byte-based
     # coalescing collapses this small-bytes frame to 1-2 partitions —
     # every downstream stage that STREAMS from the checkpoint (the
@@ -148,7 +148,7 @@ def prefix_filter_jaccard_join(
     # cluster size. Round-robin to the default parallelism pins the
     # probe-side task count; at scale the frame has real volume and the
     # explicit count is what the exchange would use anyway.
-    prefix = ensure_parallelism(prefix).localCheckpoint(eager=True)
+    prefix = checkpoint(ensure_parallelism(prefix))
     a, b = prefix.alias("a"), prefix.alias("b")
     cands = (
         a.join(

@@ -24,6 +24,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from cosmos_xenna_spark.operators.cache import checkpoint
+
 
 def _as_double(col) -> Column:
     return F.transform(col if isinstance(col, Column) else F.col(col), lambda x: x.cast("double"))
@@ -746,11 +748,10 @@ def truncation_recall(
     w = Window.partitionBy("query_id", "d").orderBy(
         F.desc("score"), F.asc("neighbor_id")
     )
-    topk = (
+    topk = checkpoint(
         scored.withColumn("r", F.row_number().over(w))
         .filter(F.col("r") <= k)
         .select("query_id", "d", "neighbor_id")
-        .localCheckpoint(eager=True)
     )
     full = topk.filter(F.col("d") == maxd).select(
         F.col("query_id").alias("__full_q"),

@@ -33,6 +33,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from cosmos_xenna_spark.operators.cache import checkpoint
+
 # the 3x3 Moore neighborhood, anchor-side fan-out
 _OFFSETS = [(dx, dy) for dx in (-1, 0, 1) for dy in (-1, 0, 1)]
 
@@ -59,7 +61,7 @@ def grid_radius_pairs(
     """
     if cell < radius:
         raise ValueError(f"cell edge {cell} < radius {radius}: 3x3 incomplete")
-    pts = points.select(
+    pts = checkpoint(points.select(
         F.col(id_col).cast("bigint").alias("pid"),
         F.col(x_col).cast("bigint").alias("px"),
         F.col(y_col).cast("bigint").alias("py"),
@@ -69,7 +71,7 @@ def grid_radius_pairs(
         F.expr(f"CAST(CAST({y_col} AS BIGINT) DIV {int(cell)} AS BIGINT)").alias(
             "cy"
         ),
-    ).localCheckpoint(eager=True)  # feeds the anchor AND probe sides
+    ))  # feeds the anchor AND probe sides
 
     offsets = F.array(
         *[F.struct(F.lit(dx).alias("dx"), F.lit(dy).alias("dy")) for dx, dy in _OFFSETS]
@@ -200,7 +202,7 @@ def grid_hotspots(
     the join.  The cell frame feeds both sides, so it is eagerly
     checkpointed (the privacy-audit lesson).
     """
-    cells = (
+    cells = checkpoint(
         points.select(
             F.expr(
                 f"CAST(CAST({x_col} AS BIGINT) DIV {int(cell)} AS BIGINT)"
@@ -211,7 +213,6 @@ def grid_hotspots(
         )
         .groupBy("cx", "cy")
         .agg(F.count(F.lit(1)).cast("bigint").alias("n"))
-        .localCheckpoint(eager=True)
     )
     offsets = F.array(
         *[F.struct(F.lit(dx).alias("dx"), F.lit(dy).alias("dy")) for dx, dy in _OFFSETS]
@@ -295,7 +296,7 @@ def grid_nn_histogram(
     """
     if cell < radius:
         raise ValueError(f"cell edge {cell} < radius {radius}: 3x3 incomplete")
-    pts = points.select(
+    pts = checkpoint(points.select(
         F.col(id_col).cast("bigint").alias("pid"),
         F.col(x_col).cast("bigint").alias("px"),
         F.col(y_col).cast("bigint").alias("py"),
@@ -305,7 +306,7 @@ def grid_nn_histogram(
         F.expr(f"CAST(CAST({y_col} AS BIGINT) DIV {int(cell)} AS BIGINT)").alias(
             "cy"
         ),
-    ).localCheckpoint(eager=True)  # feeds the join AND the all-points side
+    ))  # feeds the join AND the all-points side
 
     offsets = F.array(
         *[F.struct(F.lit(dx).alias("dx"), F.lit(dy).alias("dy")) for dx, dy in _OFFSETS]
@@ -430,7 +431,7 @@ def grid_dbscan_classify(
     """
     if cell < radius:
         raise ValueError(f"cell edge {cell} < radius {radius}: 3x3 incomplete")
-    pts = points.select(
+    pts = checkpoint(points.select(
         F.col(id_col).cast("bigint").alias("pid"),
         F.col(x_col).cast("bigint").alias("px"),
         F.col(y_col).cast("bigint").alias("py"),
@@ -440,7 +441,7 @@ def grid_dbscan_classify(
         F.expr(f"CAST(CAST({y_col} AS BIGINT) DIV {int(cell)} AS BIGINT)").alias(
             "cy"
         ),
-    ).localCheckpoint(eager=True)
+    ))
 
     offsets = F.array(
         *[F.struct(F.lit(dx).alias("dx"), F.lit(dy).alias("dy")) for dx, dy in _OFFSETS]
@@ -463,7 +464,7 @@ def grid_dbscan_classify(
         F.col("cy").alias("ny"),
     )
     r2 = int(radius) * int(radius)
-    pairs = (
+    pairs = checkpoint(
         anchors.join(probes, ["nx", "ny"])
         .filter(F.col("id_a") != F.col("id_b"))
         .filter(
@@ -471,8 +472,7 @@ def grid_dbscan_classify(
             + (F.col("ya") - F.col("yb")) * (F.col("ya") - F.col("yb"))
             <= F.lit(r2)
         )
-        .select("id_a", "ca_x", "ca_y", "id_b")
-        .localCheckpoint(eager=True)  # feeds BOTH classification rounds
+        .select("id_a", "ca_x", "ca_y", "id_b")  # feeds BOTH classification rounds
     )
     # round 1: neighbor counts -> core flags (self-inclusive min_pts)
     cores = pairs.groupBy(F.col("id_a").alias("pid")).agg(

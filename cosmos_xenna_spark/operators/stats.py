@@ -28,6 +28,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from cosmos_xenna_spark.operators.cache import checkpoint
+
 # ---------------------------------------------------------------------------
 # histogram
 # ---------------------------------------------------------------------------
@@ -1625,7 +1627,7 @@ def cohens_kappa(
     conf = df.select(
         F.col(rater_a_col).alias("la"), F.col(rater_b_col).alias("lb")
     ).groupBy("la", "lb").agg(F.count(F.lit(1)).alias("n"))
-    conf = conf.localCheckpoint(eager=True)
+    conf = checkpoint(conf)
     ra = conf.groupBy("la").agg(F.sum("n").alias("ra"))
     rb = conf.groupBy("lb").agg(F.sum("n").alias("rb"))
     chance = (
@@ -2421,14 +2423,13 @@ def multiclass_f1(
     combined, vocabulary-sized output), everything after runs on the
     confusion frame — class-count scale, not corpus scale.
     """
-    conf = (
+    conf = checkpoint(
         preds.select(
             F.col(gold_col).cast("string").alias("g"),
             F.col(pred_col).cast("string").alias("p"),
         )
         .groupBy("g", "p")
         .agg(F.count(F.lit(1)).cast("bigint").alias("n"))
-        .localCheckpoint(eager=True)
     )
     classes = conf.select(F.col("g").alias("cls")).distinct()
     tp = conf.filter(F.col("g") == F.col("p")).select(
@@ -2444,7 +2445,7 @@ def multiclass_f1(
         .groupBy(F.col("g").alias("cls"))
         .agg(F.sum("n").cast("bigint").alias("fn"))
     )
-    per_class = (
+    per_class = checkpoint(
         classes.join(tp, "cls", "left")
         .join(fp, "cls", "left")
         .join(fn, "cls", "left")
@@ -2466,7 +2467,6 @@ def multiclass_f1(
             "CAST(2000000 * tp DIV NULLIF(2 * tp + fp + fn, 0) AS BIGINT)"
             " AS f1_ppm",
         )
-        .localCheckpoint(eager=True)
     )
     macro = per_class.selectExpr(
         "'__macro__' AS cls",
@@ -2586,7 +2586,7 @@ def ab_mann_whitney(
     """
     from cosmos_xenna_spark.operators.ranking import global_cumsum
 
-    vals = (
+    vals = checkpoint(
         units.groupBy(F.col(metric_col).alias("__m"))
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("__cnt"),
@@ -2594,7 +2594,6 @@ def ab_mann_whitney(
             .cast("bigint")
             .alias("__pos"),
         )
-        .localCheckpoint(eager=True)
     )
     vals = global_cumsum(vals, "__cnt", ["__m"], out_col="__cum")
     agg = vals.agg(

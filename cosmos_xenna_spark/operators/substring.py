@@ -26,6 +26,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from cosmos_xenna_spark.operators.cache import checkpoint, release_local_checkpoint
+
 
 def enumerate_grams(
     docs: DataFrame, text_col: str = "text", k: int = 20, stride: int = 1
@@ -159,7 +161,7 @@ class IncrementalSubstringDedup:
     the index.
 
     Index maintenance is a full-outer merge keyed by ``h`` with
-    localCheckpoint rotation (the BPE merge-table discipline): cost per
+    checkpoint rotation (the BPE merge-table discipline): cost per
     batch tracks the INDEX size, not corpus history length. At 100 TB
     the index lives in a keyed store (state store / Delta MERGE); a
     dependency-free single-session build keeps it as a checkpointed
@@ -178,11 +180,7 @@ class IncrementalSubstringDedup:
         self.text_col, self.k, self.stride = text_col, k, stride
         if corpus is not None:
             grams = enumerate_grams(ensure_parallelism(corpus), text_col, k, stride)
-            self._index = (
-                grams.groupBy("h")
-                .agg(F.count(F.lit(1)).alias("cnt"))
-                .localCheckpoint(eager=True)
-            )
+            self._index = checkpoint(grams.groupBy("h").agg(F.count(F.lit(1)).alias("cnt")))
         else:
             self._index = None
 
@@ -196,9 +194,9 @@ class IncrementalSubstringDedup:
         underneath lazy plans otherwise."""
         from cosmos_xenna_spark.operators.dedup import ensure_parallelism
 
-        grams = enumerate_grams(
-            ensure_parallelism(batch_docs), self.text_col, self.k, self.stride
-        ).localCheckpoint(eager=True)
+        grams = checkpoint(
+            enumerate_grams(ensure_parallelism(batch_docs), self.text_col, self.k, self.stride)
+        )
 
         okey = F.expr("printf('%020d|%020d', doc_id, pos)")
         wh = Window.partitionBy("h")
@@ -221,9 +219,7 @@ class IncrementalSubstringDedup:
             F.col("pos").alias("start"),
             (F.col("pos") + self.k).alias("end"),
         )
-        report = merge_spans_report(batch_docs, spans, self.text_col).localCheckpoint(
-            eager=True
-        )
+        report = checkpoint(merge_spans_report(batch_docs, spans, self.text_col))
 
         batch_counts = grams.groupBy("h").agg(F.count(F.lit(1)).alias("cnt"))
         if self._index is None:
@@ -238,9 +234,12 @@ class IncrementalSubstringDedup:
                 )
             )
         old = self._index
-        self._index = merged.localCheckpoint(eager=True)
+        self._index = checkpoint(merged)
+        # The report and the new index are materialised, so nothing plans
+        # against the batch grams or the superseded index any more.
+        release_local_checkpoint(grams)
         if old is not None:
-            old.unpersist()
+            release_local_checkpoint(old)
         return report
 
 
@@ -503,7 +502,25 @@ def winnow_fingerprints(
         .orderBy("pos")
         .rowsBetween(0, window - 1)
     )
-    selected = (
+    # The selected-fingerprint frame feeds TWO consumers (the
+    # doc-frequency cap aggregate and the capped join below) —
+    # without materialization the full per-position gram-hash +
+    # window-min pass re-executes once per consumer (the plan
+    # compiled to 4 Generate+Window subtrees / 4 parquet scans;
+    # ReuseExchange cannot dedupe them because the pushed-down
+    # IsNotNull filters differ per branch). One eager checkpoint of
+    # the ~2/(window+1)-of-grams frame makes the expensive pass
+    # single-execution at any scale. LIFETIME (ADVICE r12): the
+    # returned frame plans against these blocks lazily, so they
+    # must outlive the call and cannot be tied to a Python handle —
+    # a released localCheckpoint is NOT recomputable (cache.py
+    # contract), and the scoped-persist alternative was measured
+    # 7x SLOWER here (18.5 s vs 2.5 s isolated median: the cached
+    # relation materializes AQE's byte-coalesced 1-2 partitions and
+    # every downstream stage inherits that task count). One
+    # selected-fingerprint table per call, node-sized — bounded;
+    # cleanup belongs to the JVM ContextCleaner.
+    selected = checkpoint(
         grams.withColumn("__sel", F.min(key).over(w))
         # only complete windows select (standard winnowing): the start
         # position must leave `window` grams before the end
@@ -514,25 +531,6 @@ def winnow_fingerprints(
             (-F.col("__sel.np")).cast("bigint").alias("pos"),
         )
         .distinct()
-        # The selected-fingerprint frame feeds TWO consumers (the
-        # doc-frequency cap aggregate and the capped join below) —
-        # without materialization the full per-position gram-hash +
-        # window-min pass re-executes once per consumer (the plan
-        # compiled to 4 Generate+Window subtrees / 4 parquet scans;
-        # ReuseExchange cannot dedupe them because the pushed-down
-        # IsNotNull filters differ per branch). One eager checkpoint of
-        # the ~2/(window+1)-of-grams frame makes the expensive pass
-        # single-execution at any scale. LIFETIME (ADVICE r12): the
-        # returned frame plans against these blocks lazily, so they
-        # must outlive the call and cannot be tied to a Python handle —
-        # a released localCheckpoint is NOT recomputable (cache.py
-        # contract), and the scoped-persist alternative was measured
-        # 7x SLOWER here (18.5 s vs 2.5 s isolated median: the cached
-        # relation materializes AQE's byte-coalesced 1-2 partitions and
-        # every downstream stage inherits that task count). One
-        # selected-fingerprint table per call, node-sized — bounded;
-        # cleanup belongs to the JVM ContextCleaner.
-        .localCheckpoint(eager=True)
     )
     doc_freq = selected.groupBy("fp").agg(
         F.count_distinct("doc_id").alias("__nd")

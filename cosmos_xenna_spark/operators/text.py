@@ -14,6 +14,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from cosmos_xenna_spark.functions import md5_long63
+from cosmos_xenna_spark.operators.cache import checkpoint
 
 STOPWORDS = ("the", "a", "and", "of", "to", "in")
 
@@ -217,14 +218,13 @@ def vocab_jaccard(
     (languages, sources); the token join is the only corpus-sized
     work.
     """
-    toks = (
+    toks = checkpoint(
         docs.select(
             F.col(group_col).alias("g"),
             F.explode(F.split(F.col(text_col), " ")).alias("tok"),
         )
         .filter(F.col("tok") != "")
         .distinct()
-        .localCheckpoint(eager=True)
     )
     sizes = toks.groupBy("g").agg(F.count(F.lit(1)).alias("n_vocab"))
     inter = (

@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 
 from cosmos_xenna_spark.catalog import load_table
 from cosmos_xenna_spark.functions import dec
+from cosmos_xenna_spark.operators.cache import checkpoint
 from cosmos_xenna_spark.operators.eventops import (
     rolling_distinct_count_sql,
     last_touch_attribution,
@@ -1369,7 +1370,10 @@ _SEQ_UNITS_SQL = f"""
 )
 def q_ab_sequential_looks(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
-    units = (
+    # Feeds the bounds job AND the main plan: checkpoint eagerly or
+    # the user-grain agg executes once per consumer (the roc_auc /
+    # DSIR totals-branch lesson).
+    units = checkpoint(
         ev.groupBy("user_id")
         .agg(
             F.when(F.min_by("event_type", "event_id") == "purchase", 1)
@@ -1383,10 +1387,6 @@ def q_ab_sequential_looks(spark: SparkSession, sf_dir: str) -> DataFrame:
             "converted",
             "ts_us",
         )
-        # Feeds the bounds job AND the main plan: checkpoint eagerly or
-        # the user-grain agg executes once per consumer (the roc_auc /
-        # DSIR totals-branch lesson).
-        .localCheckpoint(eager=True)
     )
     lo, hi = units.agg(
         F.min("ts_us").alias("lo"), F.max("ts_us").alias("hi")

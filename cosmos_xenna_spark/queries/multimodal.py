@@ -15,6 +15,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from cosmos_xenna_spark.catalog import load_table
+from cosmos_xenna_spark.operators.cache import checkpoint
 from cosmos_xenna_spark.operators.multimodal import (
     attach_fake_audio,
     attach_fake_frames,
@@ -382,9 +383,7 @@ def q_tiff_exif_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_exif_privacy_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select("doc_id")
-    entries = tiff_entries(attach_fake_tiff_corpus(docs)).localCheckpoint(
-        eager=True
-    )
+    entries = checkpoint(tiff_entries(attach_fake_tiff_corpus(docs)))
     makes = entries.filter(F.col("tag") == 271).select(
         "id", F.col("value_text").alias("make")
     )

@@ -7,6 +7,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from cosmos_xenna_spark.catalog import load_table
+from cosmos_xenna_spark.operators.cache import checkpoint
 from cosmos_xenna_spark.operators.text import (
     NORMALIZE_SQL_TMPL,
     normalize_text,
@@ -570,9 +571,8 @@ def q_symspell_suggest(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("token")
         .agg(F.count(F.lit(1)).cast("bigint").alias("freq"))
     )
-    dict_df = (
+    dict_df = checkpoint(
         vocab.filter((F.col("freq") >= 5) & (F.length("token") >= 4))
-        .localCheckpoint(eager=True)
     )
     q1 = dict_df.select(
         F.expr(

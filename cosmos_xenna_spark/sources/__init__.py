@@ -52,10 +52,6 @@ def read_json(spark: SparkSession, path: str, schema: str | None = None) -> Data
     return (reader.schema(schema) if schema else reader).json(path)
 
 
-def read_text(spark: SparkSession, path: str, whole: bool = False) -> DataFrame:
-    return spark.read.option("wholetext", str(whole).lower()).text(path)
-
-
 def read_binary_files(
     spark: SparkSession, path: str, glob: str | None = None
 ) -> DataFrame:

@@ -426,96 +426,6 @@ def streaming_last_touch_attribution(
     )
 
 
-def streaming_abandoned_carts_tws(
-    stream_df: DataFrame,
-    timeout_secs: int = 1800,
-    source_types: tuple[str, ...] = ("click", "view"),
-    conversion_type: str = "purchase",
-    watermark: str = "10 minutes",
-) -> DataFrame:
-    """Timeout detection on the Spark 4 ``transformWithStateInPandas``
-    TIMER API — same semantics as :func:`streaming_abandoned_carts`
-    (which is the portable implementation), expressed with explicit
-    event-time timers and a ValueState.
-
-    REQUIRES ``protobuf`` (the TWS state-server protocol dependency of
-    stock PySpark) — absent from this container, so the parity test
-    import-skips; the gate is the dependency, not the engine (the
-    PIL/compressed-codec precedent).  A stale timer (re-armed after it
-    was set) fires but emits nothing — the expiry-matches-state guard
-    makes emission exactly-once per abandonment.
-    """
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    timeout_ms = timeout_secs * 1000
-    srcs = set(source_types)
-
-    class _Abandoned(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self.handle = handle
-            self.pending = handle.getValueState("pending", "src_id long, src_ts long")
-
-        def handleInputRows(self, key, rows, timer_values):
-            sid, sts = (
-                self.pending.get() if self.pending.exists() else (None, None)
-            )
-            events = []
-            for pdf in rows:
-                us = pdf["ts"].astype("datetime64[ms]").astype("int64")
-                events.extend(
-                    zip(us, pdf["event_id"], pdf["event_type"])
-                )
-            for ts_ms, eid, etype in sorted(events):
-                if etype in srcs:
-                    sid, sts = int(eid), int(ts_ms)
-                    self.handle.registerTimer(sts + timeout_ms)
-                elif etype == conversion_type:
-                    sid, sts = None, None
-            if sid is None:
-                self.pending.clear()
-            else:
-                self.pending.update((sid, sts))
-            return iter([])
-
-        def handleExpiredTimer(self, key, timer_values, expired_timer_info):
-            if not self.pending.exists():
-                return iter([])
-            sid, sts = self.pending.get()
-            # stale-timer guard: only the timer armed by the CURRENT
-            # pending source emits
-            if expired_timer_info.getExpiryTimeInMs() != sts + timeout_ms:
-                return iter([])
-            self.pending.clear()
-            return iter(
-                [
-                    pd.DataFrame(
-                        {
-                            "user_id": [int(key[0])],
-                            "src_event_id": [sid],
-                            "armed_ts_ms": [sts],
-                        }
-                    )
-                ]
-            )
-
-        def close(self) -> None:
-            pass
-
-    return (
-        stream_df.withWatermark("ts", watermark)
-        .groupBy("user_id")
-        .transformWithStateInPandas(
-            _Abandoned(),
-            outputStructType="user_id long, src_event_id long, armed_ts_ms long",
-            outputMode="append",
-            timeMode="eventTime",
-        )
-    )
-
-
 def streaming_abandoned_carts(
     stream_df: DataFrame,
     timeout_secs: int = 1800,

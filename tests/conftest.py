@@ -39,6 +39,21 @@ def duck(sf_dir):
 
 
 @pytest.fixture
+def checkpoint_dir(spark, tmp_path):
+    """A checkpoint directory on the session's context for one test, so
+    ``cache.checkpoint`` takes reliable checkpoints. Teardown unsets it:
+    a directory left behind would switch every later test to reliable
+    checkpoints."""
+    sc = spark.sparkContext
+    path = tmp_path / "ckpt"
+    sc.setCheckpointDir(str(path))
+    try:
+        yield path
+    finally:
+        getattr(sc._jsc.sc(), "checkpointDir_$eq")(sc._jvm.scala.Option.empty())
+
+
+@pytest.fixture
 def job_meter(spark, monkeypatch):
     """``run(fn) -> (result, n_jobs, checkpoints)``: the Spark jobs ``fn``
     ran, counted by job group (helper threads inherit it), and the frames

@@ -25,6 +25,7 @@ from cosmos_xenna_spark.operators.dedup import (
     ngram_jaccard_pairs,
 )
 from cosmos_xenna_spark.operators.graph import sssp_weighted
+from cosmos_xenna_spark.operators.substring import IncrementalSubstringDedup
 
 
 def _ids(spark) -> set[int]:
@@ -196,6 +197,26 @@ def test_bpe_train_releases_its_checkpoints(spark):
     merges = bpe_train(docs, n_merges=12, min_pair_count=2)
     assert len(merges) >= 8  # at least two checkpoints after the initial one
     assert not (_ids(spark) - base), "bpe_train left checkpoints pinned"
+
+
+def test_incremental_substring_dedup_pins_only_index_and_reports(spark):
+    """Each batch supersedes the index and its own gram table; after three
+    batches only the live index and the three returned reports may stay
+    pinned."""
+    base = _ids(spark)
+    text = "the quick brown fox jumps over the lazy dog "
+    state = IncrementalSubstringDedup(
+        spark.createDataFrame([(0, text * 3)], "doc_id long, text string"), k=8
+    )
+    reports = [
+        state.process_batch(
+            spark.createDataFrame([(b, f"{b} {text}{b}")], "doc_id long, text string")
+        )
+        for b in (1, 2, 3)
+    ]
+    assert [r.first().n_spans for r in reports] == [1, 1, 1]
+    live = {_checkpoint_rdd(df).id() for df in (state._index, *reports)}
+    assert _ids(spark) - base == live
 
 
 def _grow(limit: int):

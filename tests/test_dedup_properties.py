@@ -126,25 +126,31 @@ def test_connected_components_rejects_non_integer_ids(spark):
         connected_components(pairs)
 
 
-def test_connected_components_reliable_checkpoint_identical(spark, tmp_path):
-    """reliable_checkpoint=True (durable checkpoint dir — survives
-    executor loss on long 100 TB runs) must produce the same clusters
-    as the local-checkpoint default."""
+def test_connected_components_reliable_checkpoint_identical(spark, request):
+    """Under a checkpoint directory (durable checkpoints that survive
+    executor loss on long 100 TB runs) connected_components must produce
+    the same clusters as with local checkpoints, pin no block and write
+    its checkpoints under the directory."""
     from cosmos_xenna_spark.operators.dedup import connected_components
 
     pairs = spark.createDataFrame(
         [(1, 2), (2, 3), (10, 11), (20, 21), (21, 22), (22, 20)],
         "doc_a long, doc_b long",
     )
-    spark.sparkContext.setCheckpointDir(str(tmp_path / "ckpt"))
-    reliable = {
-        (r.doc_id, r.cluster_id)
-        for r in connected_components(pairs, reliable_checkpoint=True).collect()
-    }
     local = {
         (r.doc_id, r.cluster_id)
         for r in connected_components(pairs).collect()
     }
+    ckpt = request.getfixturevalue("checkpoint_dir")
+    pinned = set(spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray())
+    reliable = {
+        (r.doc_id, r.cluster_id)
+        for r in connected_components(pairs).collect()
+    }
+    assert not (
+        set(spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray()) - pinned
+    ), "reliable checkpoints must not pin blocks"
+    assert any(p.is_file() for p in ckpt.rglob("part-*"))
     assert reliable == local
     assert reliable == {
         (1, 1), (2, 1), (3, 1), (10, 10), (11, 10),

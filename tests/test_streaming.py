@@ -728,10 +728,10 @@ def test_streaming_abandoned_carts_timers(spark, tmp_path):
 
 
 def test_streaming_abandoned_carts_tws_requires_protobuf():
-    """The transformWithStateInPandas variant is gated on protobuf (the
-    TWS state-server protocol dep, absent in this container). When the
-    dependency exists this test should be extended to a full parity run
-    against streaming_abandoned_carts."""
+    """A transformWithStateInPandas variant of streaming_abandoned_carts
+    needs protobuf (the TWS state-server protocol dep, not installed).
+    When the dependency exists, add the variant with a full parity run
+    against streaming_abandoned_carts here."""
     import pytest
 
     pytest.importorskip("google.protobuf")
