@@ -31,7 +31,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from cosmos_xenna_spark.operators.cache import checkpoint, release_local_checkpoint
+from cosmos_xenna_spark.operators.cache import checkpoint, release_checkpoint
 
 EOW = "</w>"
 # Merges between symbol-table checkpoints: each merge nests one more
@@ -119,10 +119,10 @@ def bpe_train(
             symtab = _apply_merge(symtab, left, right)
             if (i + 1) % CHECKPOINT_EVERY == 0:
                 symtab = checkpoint(symtab)
-                release_local_checkpoint(held)
+                release_checkpoint(held)
                 held = symtab
     finally:
-        release_local_checkpoint(held)
+        release_checkpoint(held)
     return merges
 
 

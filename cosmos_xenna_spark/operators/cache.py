@@ -23,15 +23,17 @@ the result DataFrame handed back to the caller:
   the release early — that is SAFE (persist is an optimization; the
   derived plan recomputes), it just loses the reuse, so operators that
   compose should hold the original handle across any eager step.
-- :func:`release_local_checkpoint` deterministically drops the blocks
-  behind an (eager) ``localCheckpoint`` once nothing can plan against
-  it anymore — e.g. iteration k's state after iteration k+1 has
+- :func:`release_checkpoint` deterministically drops the blocks or
+  files behind an eager :func:`checkpoint` once nothing can plan
+  against it anymore — e.g. iteration k's state after iteration k+1 has
   materialized. Unlike a persist, a released checkpoint CANNOT be
   recomputed (the lineage was truncated), so this must never be driven
   by a Python-object-lifetime signal: frames derived from a result
   keep planning against the final checkpoint's blocks after the
   original handle dies. Only release state that is provably
-  superseded; leave the final checkpoint to the JVM's ContextCleaner.
+  superseded; leave the final checkpoint to the JVM's ContextCleaner
+  (which deletes a reliable checkpoint's files only when
+  ``spark.cleaner.referenceTracking.cleanCheckpoints`` is on).
 - :func:`fixpoint` is the iterative loop built on the two checkpoint
   helpers: :func:`checkpoint` the state, release the checkpoint it
   supersedes, step. Its optional stop signal is an aggregate observed
@@ -46,15 +48,13 @@ executor that computed them. Without one they are local: kept in the
 executors' block managers, cheaper, but gone with their executor, and
 a consumer of a lost block fails instead of recomputing. This is Spark
 MLlib's ``checkpointInterval`` rule; the directory is the switch, there
-is no option. :func:`release_local_checkpoint` does nothing to a
-reliable checkpoint (its RDD is not persisted), so release discipline
-is the same for both kinds; reliable checkpoint files stay in the
-directory unless ``spark.cleaner.referenceTracking.cleanCheckpoints``
-is on.
+is no option. :func:`release_checkpoint` unpersists a local
+checkpoint's blocks and deletes a reliable checkpoint's directory, so
+release discipline is the same for both kinds.
 
-All releases are best-effort and non-blocking: at interpreter shutdown
-the JVM gateway may already be gone, and a failed unpersist just means
-falling back to Spark's own GC-driven cleanup.
+All releases are best-effort, and unpersists are non-blocking: at
+interpreter shutdown the JVM gateway may already be gone, and a failed
+release just means falling back to Spark's own GC-driven cleanup.
 """
 
 from __future__ import annotations
@@ -110,29 +110,36 @@ def rescope(src: DataFrame, derived: DataFrame) -> DataFrame:
 
 
 def _checkpoint_rdd(df: DataFrame):
-    """The JVM RDD backing an eager ``localCheckpoint`` (a LogicalRDD
-    leaf). Returns None for plans that aren't checkpoint leaves."""
+    """The JVM RDD backing an eager checkpoint (a LogicalRDD leaf).
+    Returns None for plans that aren't checkpoint leaves."""
     try:
         return df._jdf.queryExecution().analyzed().rdd()
     except Exception:  # noqa: BLE001 — non-LogicalRDD plan / gateway gone
         return None
 
 
-def release_local_checkpoint(df: DataFrame) -> None:
-    """Immediately drop the blocks behind a localCheckpoint'd frame.
+def release_checkpoint(df: DataFrame) -> None:
+    """Immediately drop what backs a :func:`checkpoint`'d frame: the
+    blocks of a local checkpoint, the files of a reliable one.
 
     Only call once every plan derived from ``df`` has either been
     executed or re-checkpointed — after this the data is gone and the
-    checkpoint leaf cannot be recomputed (that is localCheckpoint's
-    documented contract; this just makes the release prompt instead of
-    waiting for JVM GC).
+    checkpoint leaf cannot be recomputed (the lineage was truncated;
+    this just makes the release prompt instead of waiting for JVM GC).
     """
     rdd = _checkpoint_rdd(df)
-    if rdd is not None:
-        try:
-            rdd.unpersist(False)
-        except Exception:  # noqa: BLE001
-            pass
+    if rdd is None:
+        return
+    try:
+        rdd.unpersist(False)
+        files = rdd.getCheckpointFile()
+        if files.isDefined():
+            jvm = df.sparkSession.sparkContext._jvm
+            path = jvm.org.apache.hadoop.fs.Path(files.get())
+            hadoop_conf = df.sparkSession.sparkContext._jsc.hadoopConfiguration()
+            path.getFileSystem(hadoop_conf).delete(path, True)
+    except Exception:  # noqa: BLE001
+        pass
 
 
 def checkpoint(df: DataFrame) -> DataFrame:
@@ -177,7 +184,7 @@ def fixpoint(
             state = state.observe(seen, signal.alias("v"))
         state = checkpoint(state)
         if prev is not None:
-            release_local_checkpoint(prev)
+            release_checkpoint(prev)
         prev = state
         if signal is not None:
             v = seen.get["v"]

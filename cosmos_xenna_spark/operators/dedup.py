@@ -27,7 +27,7 @@ from cosmos_xenna_spark.operators.cache import (
     _checkpoint_rdd,
     checkpoint,
     fixpoint,
-    release_local_checkpoint,
+    release_checkpoint,
     scoped_persist,
 )
 
@@ -405,7 +405,7 @@ def connected_components(
     # after the original handle is gone, so its cleanup belongs to the
     # JVM's ContextCleaner (one small label table per call — bounded).
     if _checkpoint_rdd(labels) is not None:
-        release_local_checkpoint(edges)
+        release_checkpoint(edges)
     return labels.select(F.col("id").alias("doc_id"), F.col("label").alias("cluster_id"))
 
 

@@ -47,7 +47,7 @@ from pyspark.sql import functions as F
 from cosmos_xenna_spark.operators.cache import (
     checkpoint,
     fixpoint,
-    release_local_checkpoint,
+    release_checkpoint,
     scoped_persist,
 )
 
@@ -191,7 +191,7 @@ def _rank_walk(
     # `nodes` and the last rank checkpoint, so those three are left to
     # the JVM ContextCleaner (frames derived from the result keep
     # planning against them).
-    release_local_checkpoint(e0)
+    release_checkpoint(e0)
     t = seen.get["t"] or 0
     if t == 0:
         raise ValueError("the walk needs >= 1 node (and, personalized, >= 1 seed in the graph)")
@@ -785,7 +785,7 @@ def hits_fixed(
         # one has materialized (its lazy auths view fed exactly the
         # h_raw checkpoint of that iteration).
         if a_holder is not None:
-            release_local_checkpoint(a_holder)
+            release_checkpoint(a_holder)
         a_holder = a_raw
         auths = _norm(a_raw, "a")
         a_side = auths.withColumnRenamed("node", "dst")
@@ -795,7 +795,7 @@ def hits_fixed(
             .agg(F.sum("a").alias("raw"))
         )
         if h_holder is not None:
-            release_local_checkpoint(h_holder)
+            release_checkpoint(h_holder)
         h_holder = h_raw
         hubs = _norm(h_raw, "h")
     # One zero-fill at the end recovers the all-nodes contract (auth/hub
@@ -810,7 +810,7 @@ def hits_fixed(
             F.coalesce("h", F.lit(0)).cast("bigint").alias("hub_fp"),
         )
     )
-    release_local_checkpoint(e)
+    release_checkpoint(e)
     return out
 
 

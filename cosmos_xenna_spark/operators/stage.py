@@ -19,7 +19,8 @@ Reference parity map (citations into /root/reference):
   (``pipelines/v1/test_dynamic_splitting.py:45-110``).
 - ``setup_on_node`` exactly-once-per-node (``specs.py:247-255``,
   election ``actor_pool.py:1066-1074``): executor-process file lock —
-  first process on the host runs it, others wait.
+  first process on the host runs it, others wait. The lock and markers
+  live in one per-driver temp directory that the driver removes at exit.
 - Failure policy ``num_run_attempts_python`` / ``ignore_failures``
   (``specs.py:438-457``, retry ``stage_worker.py:792-815``): in-UDF
   retry loop + drop-on-failure; worker-level retries remain Spark's
@@ -40,8 +41,10 @@ no driver-side materialization anywhere (the 100 TB rule).
 from __future__ import annotations
 
 import atexit
+import functools
 import inspect
 import os
+import shutil
 import socket
 import tempfile
 import threading
@@ -209,6 +212,21 @@ def _steal_stale_lock(lock: str, dead_pid: int | None) -> None:
             pass
 
 
+@functools.cache
+def _driver_scope() -> str:
+    """This driver's run-id prefix, which names the directory that holds
+    its node-setup markers.
+
+    Workers keep a run's marker, lock and failure record under
+    ``<tempdir>/cxs_node_setup_<scope>/``, and the driver removes its own
+    host's copy at exit, as it does its socket directory. On a cluster
+    the other hosts keep one such directory per driver."""
+    scope = uuid.uuid4().hex
+    path = os.path.join(tempfile.gettempdir(), f"cxs_node_setup_{scope}")
+    atexit.register(shutil.rmtree, path, ignore_errors=True)
+    return scope
+
+
 def _node_setup_once(stage: Stage, run_id: str) -> None:
     """Exactly-once-per-host ``setup_on_node`` via file lock election.
 
@@ -235,6 +253,7 @@ def _node_setup_once(stage: Stage, run_id: str) -> None:
     marker = os.path.join(tempfile.gettempdir(), f"cxs_node_setup_{run_id}")
     failed = marker + ".failed"
     lock = marker + ".lock"
+    os.makedirs(os.path.dirname(marker), exist_ok=True)
 
     def try_acquire() -> bool:
         # Atomic acquire-with-PID: the PID is IN the file before the
@@ -336,7 +355,7 @@ def _rebatch(batches: Iterator[pd.DataFrame], size: int | None) -> Iterator[pd.D
 
 def make_map_in_pandas_fn(stage_factory, run_id: str | None = None):
     """Compile a Stage factory into a mapInPandas UDF body."""
-    run_id = run_id or uuid.uuid4().hex
+    run_id = run_id or os.path.join(_driver_scope(), uuid.uuid4().hex)
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         stage = _get_stage_instance(stage_factory, run_id)

@@ -26,7 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from cosmos_xenna_spark.operators.cache import checkpoint, release_local_checkpoint
+from cosmos_xenna_spark.operators.cache import checkpoint, release_checkpoint
 
 
 def enumerate_grams(
@@ -237,9 +237,9 @@ class IncrementalSubstringDedup:
         self._index = checkpoint(merged)
         # The report and the new index are materialised, so nothing plans
         # against the batch grams or the superseded index any more.
-        release_local_checkpoint(grams)
+        release_checkpoint(grams)
         if old is not None:
-            release_local_checkpoint(old)
+            release_checkpoint(old)
         return report
 
 

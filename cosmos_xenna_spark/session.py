@@ -88,59 +88,18 @@ def get_spark(
         # as parsed:null because of it). Nothing local needs the bar.
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
-        # Scan-parallelism FLOOR (guide: spark.sql.files.minPartitionNum
-        # sets a floor on scan parallelism): it cuts a file into ~cores
-        # byte-range splits instead of ONE (maxPartitionBytes=128MB).
-        # The splits only carry rows when the file has several row
-        # groups: parquet cannot be read from inside a row group, so a
-        # split gets the row groups whose midpoint it holds.  Every
-        # local test and bench table (sf0.001-sf0.1) is one file with
-        # one row group, so there the floor yields ~cores scan
-        # partitions of which one holds all rows (sf0.1 lineitem on 4
-        # cores: [0, 600000, 0, 0]) and scan-rooted work still starts on
-        # one core.  At scale a scan already has far more splits than
-        # cores and the conf is a no-op.  openCostInBytes drops from its
-        # HDD-era 4MB default so the floor can bite on sub-4MB files (it
-        # only weights small-file packing; large-file splitting at scale
-        # is governed by maxPartitionBytes).  Both env-overridable for
-        # cluster profiles.
-        .config(
-            "spark.sql.files.minPartitionNum",
-            os.environ.get("SPARK_GRAFT_MIN_PARTITION_NUM", str(shuffle_partitions)),
-        )
-        .config(
-            "spark.sql.files.openCostInBytes",
-            os.environ.get("SPARK_GRAFT_OPEN_COST_BYTES", "131072"),
-        )
-        # AQE post-shuffle coalescing floor. With parallelismFirst
-        # (default true) AQE sizes coalesced partitions at
-        # max(stageBytes / defaultParallelism, minPartitionSize); the
-        # 1 MB default minPartitionSize folds every MB-scale stage to a
-        # handful of tasks — fine for byte-bound work, but a
-        # compute-per-row stage (regex tokenize, array intersections)
-        # then runs on 1-5 cores while the rest idle, and a JIT-cold
-        # single task turns a 1 s stage into a 10-15 s straggler
-        # (jstack-verified: one RUNNABLE task in Matcher.search, 31
-        # workers parked). 64 KB keeps small compute stages wide
-        # locally; at scale stageBytes/parallelism >> 1 MB so the knob
-        # is a no-op. Env-overridable.
-        .config(
-            "spark.sql.adaptive.coalescePartitions.minPartitionSize",
-            os.environ.get("SPARK_GRAFT_MIN_COALESCED_PARTITION", "65536"),
-        )
-        # Generated-class cache (STATIC conf, must be set at session
-        # build). The default is 100 entries — a multi-query session
-        # (the 75-query bench pass; any long-lived analytics service)
-        # cycles several hundred generated stages, so every pass
-        # re-compiles and re-warms its codegen, which is exactly the
-        # jstack-attributed 10-70 s cold-single-task spike class from
-        # the r12 analysis. Compiled classes are tens of KB; 2048
-        # entries is a few hundred MB worst case on a 16 GB driver and
-        # proportionally trivial on cluster executors. Env-overridable.
-        .config(
-            "spark.sql.codegen.cache.maxEntries",
-            os.environ.get("SPARK_GRAFT_CODEGEN_CACHE", "2048"),
-        )
+        # AQE post-shuffle coalescing floor. AQE sizes coalesced
+        # partitions at max(stageBytes / defaultParallelism,
+        # minPartitionSize); the 1 MB default folds MB-scale stages onto a
+        # few tasks, so a compute-per-row stage (regex tokenize, array
+        # intersections) runs on 1-5 cores behind one JIT-cold straggler.
+        # At scale stageBytes / parallelism >> 1 MB and the floor is a
+        # no-op.
+        .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "65536")
+        # Generated-class cache (static conf). The default 100 entries is
+        # smaller than the stages a multi-query session cycles, so every
+        # pass re-compiles and re-warms its codegen.
+        .config("spark.sql.codegen.cache.maxEntries", "2048")
         # Preload pandas/numpy/pyarrow in the worker daemon so forked
         # Python workers inherit them copy-on-write instead of each
         # importing cold on its first task — the dominant term of any

@@ -33,6 +33,7 @@ from pyspark.sql import functions as F
 
 from cosmos_xenna_spark.catalog import load_table
 from cosmos_xenna_spark.functions import md5_long63
+from cosmos_xenna_spark.operators.cache import checkpoint
 from cosmos_xenna_spark.operators.quality import qini_table
 from cosmos_xenna_spark.operators.stats import (
     ab_test_two_proportion,
@@ -64,9 +65,11 @@ def main() -> None:
         .alias("n_purchases"),
         F.count(F.lit(1)).cast("bigint").alias("n_events"),
     )
-    units = units.withColumn(
-        "variant", md5_long63(F.col("user_id").cast("string"), prefix="ab|") % 2
-    ).localCheckpoint(eager=True)
+    units = checkpoint(
+        units.withColumn(
+            "variant", md5_long63(F.col("user_id").cast("string"), prefix="ab|") % 2
+        )
+    )
 
     ab = ab_test_two_proportion(units).collect()[0]
     print(

@@ -35,6 +35,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import functions as F
 
 from cosmos_xenna_spark.catalog import load_table
+from cosmos_xenna_spark.operators.cache import checkpoint
 from cosmos_xenna_spark.operators.eventops import interval_iou_pairs
 from cosmos_xenna_spark.operators.multimodal import (
     attach_fake_images,
@@ -71,9 +72,7 @@ def main() -> None:
     nc0, nc1 = clips.count(), kept_clips.count()
 
     # 3. EXIF QA on poster frames: orientation histogram + GPS scrub
-    entries = tiff_entries(attach_fake_tiff_corpus(docs)).localCheckpoint(
-        eager=True
-    )
+    entries = checkpoint(tiff_entries(attach_fake_tiff_corpus(docs)))
     orient = (
         entries.filter(F.col("tag") == 274)
         .groupBy("value_long")

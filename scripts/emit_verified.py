@@ -3,10 +3,11 @@
 
 For every registry query: the latest round with a green driver row in
 CORRECTNESS_r*.json, plus the surfaced alias it was verified under.
-The alias->original mapping for each past round is reconstructed from
-git history (``__spark_entry__.py`` as of that round's artifact
-commit), so the ledger cannot drift from the rotation code
-(VERDICT r6 #7).
+The entry files of rounds 2-13 carry a literal ``DRIVER_PRIORITY``
+alias table (some with aliases such as ``q0_tpch21_waiting_suppliers``),
+so for those rounds the table is replayed from git history
+(``__spark_entry__.py`` as of the round's artifact commit). Other entry
+files alias by rule, which :func:`unalias` inverts.
 
 Usage: python scripts/emit_verified.py
 """
@@ -23,8 +24,19 @@ HERE = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, HERE)
 
 
-def _alias_map_at(commit: str | None) -> dict[str, str]:
-    """surfaced-name -> original-name as of the given commit.
+def unalias(surfaced: str, registry) -> str:
+    """Invert the entry file's ``_alias``: ``q0_X`` is ``q_X`` when that
+    is a registry name, else ``X`` (a TPC-H name, which starts with
+    ``q<digit>``). Other names are surfaced unaliased."""
+    if not surfaced.startswith("q0_"):
+        return surfaced
+    rest = surfaced[3:]
+    return f"q_{rest}" if f"q_{rest}" in registry else rest
+
+
+def _alias_map_at(commit: str | None) -> dict[str, str] | None:
+    """surfaced-name -> original-name from the literal ``DRIVER_PRIORITY``
+    table as of the given commit; None when the entry file has none.
 
     ``commit=None`` reads the WORKING TREE entry file instead — used
     for driver artifacts that exist on disk but are not yet committed
@@ -43,6 +55,8 @@ def _alias_map_at(commit: str | None) -> dict[str, str]:
             ).stdout
         except subprocess.CalledProcessError:
             return {}
+    if "DRIVER_PRIORITY" not in src:
+        return None
     # Execute only the alias-table portion: strip everything from the
     # first import of the package (the table is pure literals above it
     # in every revision).
@@ -91,6 +105,9 @@ def build() -> dict:
     artifacts = sorted(
         f for f in os.listdir(HERE) if re.fullmatch(r"CORRECTNESS_r\d+\.json", f)
     )
+    from cosmos_xenna_spark.queries import load_registry  # noqa: E402
+
+    reg = load_registry()
     ledger: dict[str, dict] = {}
     pending: list[str] = []
     for art in artifacts:
@@ -110,14 +127,14 @@ def build() -> dict:
             amap = _alias_map_at(None)
             pending.append(art)
         for surfaced in _green_rows(os.path.join(HERE, art)):
-            original = amap.get(surfaced, surfaced)
+            if amap is None:
+                original = unalias(surfaced, reg)
+            else:
+                original = amap.get(surfaced, surfaced)
             prev = ledger.get(original)
             if prev is None or rnd >= prev["round"]:
                 ledger[original] = {"round": rnd, "alias": surfaced}
 
-    from cosmos_xenna_spark.queries import load_registry  # noqa: E402
-
-    reg = load_registry()
     doc = {
         "queries": {
             name: ledger.get(

@@ -39,6 +39,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import pandas as pd  # noqa: E402
 from pyspark import cloudpickle  # noqa: E402
 
+from cosmos_xenna_spark.operators.cache import checkpoint  # noqa: E402
 from cosmos_xenna_spark.operators.pipeline import PipelineSpec, StageSpec, run_pipeline  # noqa: E402
 from cosmos_xenna_spark.operators.stage import Stage  # noqa: E402
 from cosmos_xenna_spark.session import get_spark  # noqa: E402
@@ -143,12 +144,7 @@ def vlm_hetero_3stage(spark, n_images: int = 50_000) -> dict:
     class _W(VlmWritePrep):
         resources = Resources(cpus=1.0)
 
-    df = (
-        spark.range(n_images)
-        .selectExpr("id AS doc_id")
-        .repartition(32)
-        .localCheckpoint(eager=True)
-    )
+    df = checkpoint(spark.range(n_images).selectExpr("id AS doc_id").repartition(32))
     spec = PipelineSpec(
         stages=[
             StageSpec(_D, "doc_id long, image_bytes binary"),
@@ -467,13 +463,10 @@ def image_decode_hash(spark, n_images: int = 50_000) -> dict:
         image_ahash,
     )
 
-    ids = (
-        spark.range(n_images)
-        .select(F.col("id").alias("doc_id"))
-        .repartition(32)
-        .localCheckpoint(eager=True)
+    ids = checkpoint(
+        spark.range(n_images).select(F.col("id").alias("doc_id")).repartition(32)
     )
-    imgs = attach_fake_image_corpus(ids).localCheckpoint(eager=True)
+    imgs = checkpoint(attach_fake_image_corpus(ids))
     runs = []
     for _ in range(3):
         t0 = time.perf_counter()
@@ -490,14 +483,13 @@ def image_decode_hash(spark, n_images: int = 50_000) -> dict:
 def main() -> None:
     n_rows = int(sys.argv[1]) if len(sys.argv) > 1 else 200_000
     spark = get_spark(app_name="stage_throughput")
-    df = (
+    df = checkpoint(  # exclude generation from timing
         spark.range(n_rows)
         .selectExpr(
             "id",
             "concat('document text body word content sample row ', id) AS text",
         )
         .repartition(32)
-        .localCheckpoint(eager=True)  # exclude generation from timing
     )
     # warm the python worker pool
     run_chain(spark, df.limit(1024), [Passthrough], "id long, text string")

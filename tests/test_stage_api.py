@@ -425,3 +425,50 @@ def test_segfaulting_stage_recovers_via_task_retry(tmp_path):
     assert p.returncode == 0, p.stderr[-3000:]
     assert "RECOVERED 20" in p.stdout
     assert marker.exists()  # the first attempt really did die
+
+
+_NODE_SETUP_SCRIPT = """
+import sys
+
+from cosmos_xenna_spark.operators.stage import Stage, apply_stage
+from cosmos_xenna_spark.session import get_spark
+
+log = sys.argv[1]
+
+
+class OnNode(Stage):
+    def setup_on_node(self):
+        with open(log, "a") as f:
+            f.write("x")
+
+    def process_data(self, pdf):
+        return pdf
+
+
+spark = get_spark(master="local[2]", shuffle_partitions=2)
+df = apply_stage(spark.range(40).repartition(4), OnNode, "id long")
+print("ROWS", df.count(), len(df.collect()))
+spark.stop()
+"""
+
+
+def test_node_setup_leaves_no_files_in_tmpdir(tmp_path):
+    """setup_on_node runs once per host across two actions on the same
+    frame, and its election files go when the driver exits."""
+    import subprocess
+
+    tmp = tmp_path / "tmp"
+    tmp.mkdir()
+    log = tmp_path / "setup_on_node.log"
+    p = subprocess.run(
+        [sys.executable, "-c", _NODE_SETUP_SCRIPT, str(log)],
+        cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        env={**os.environ, "TMPDIR": str(tmp)},
+        capture_output=True,
+        text=True,
+        timeout=600,
+    )
+    assert p.returncode == 0, p.stderr[-3000:]
+    assert "ROWS 40 40" in p.stdout
+    assert log.read_text() == "x"
+    assert not [n for n in os.listdir(tmp) if n.startswith("cxs_node_setup_")]
