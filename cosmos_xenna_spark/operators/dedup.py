@@ -238,8 +238,12 @@ def lsh_band_buckets(
     Built from the wide signature, so banding adds no shuffle — the
     band hashes are row-local expressions over mh0..mhN.
     """
+    return _band_buckets(minhash_wide(docs, text_col, n_hashes, k), n_hashes, band_size)
+
+
+def _band_buckets(mins: DataFrame, n_hashes: int, band_size: int) -> DataFrame:
+    """(doc_id, band, bucket) rows from a wide (doc_id, mh0..) signature."""
     n_bands = n_hashes // band_size
-    mins = minhash_wide(docs, text_col, n_hashes, k)
     band_exprs = []
     for b in range(n_bands):
         cols = ", ".join(
@@ -896,15 +900,17 @@ def minhash_bands_rowlocal(
     groupBy stays preferable for very long documents (map-side partial
     mins parallelize within a doc); for stream-sized rows the
     row-local fold is strictly cheaper.
+
+    The words array is projected once, as in :func:`word_shingles`.
     """
-    chars = f"size(split({text_col}, ' '))"
+    ws = docs.select("doc_id", F.split(F.col(text_col), " ").alias("__ws"))
     sh_arr = (
-        f"CASE WHEN {chars} >= {k} THEN "
-        f"array_distinct(transform(sequence(1, {chars} - {k - 1}),"
-        f" i -> array_join(slice(split({text_col}, ' '), i, {k}), ' '))) "
+        f"CASE WHEN size(__ws) >= {k} THEN "
+        f"array_distinct(transform(sequence(1, size(__ws) - {k - 1}),"
+        f" i -> array_join(slice(__ws, i, {k}), ' '))) "
         f"ELSE array() END"
     )
-    base = docs.select(
+    base = ws.select(
         "doc_id",
         F.expr(
             f"transform({sh_arr},"
@@ -917,17 +923,7 @@ def minhash_bands_rowlocal(
         ).alias(f"mh{s}")
         for s, (a, b, c) in enumerate(minhash_consts(n_hashes))
     ]
-    mins = base.select("doc_id", *mh_cols)
-    n_bands = n_hashes // band_size
-    band_exprs = []
-    for b in range(n_bands):
-        cols = ", ".join(
-            f"CAST(mh{s} AS STRING)" for s in range(b * band_size, (b + 1) * band_size)
-        )
-        band_exprs.append(f"{b}L, md5(concat_ws(',', {cols}))")
-    return mins.selectExpr(
-        "doc_id", f"stack({n_bands}, {', '.join(band_exprs)}) AS (band, bucket)"
-    )
+    return _band_buckets(base.select("doc_id", *mh_cols), n_hashes, band_size)
 
 
 def sorted_neighborhood_pairs(

@@ -18,16 +18,17 @@ Reference parity map (citations into /root/reference):
 - Dynamic fan-out/fan-in: output row count is unconstrained
   (``pipelines/v1/test_dynamic_splitting.py:45-110``).
 - ``setup_on_node`` exactly-once-per-node (``specs.py:247-255``,
-  election ``actor_pool.py:1066-1074``): executor-process file lock —
-  first process on the host runs it, others wait. The lock and markers
-  live in one per-driver temp directory that the driver removes at exit.
+  election ``actor_pool.py:1066-1074``): kernel file lock (``flock``),
+  released on holder death — the first process on the host to take it
+  runs setup, others wait. The lock and markers live in one per-driver
+  temp directory that the driver removes at exit.
 - Failure policy ``num_run_attempts_python`` / ``ignore_failures``
   (``specs.py:438-457``, retry ``stage_worker.py:792-815``): in-UDF
   retry loop + drop-on-failure; worker-level retries remain Spark's
   ``spark.task.maxFailures``.
-- ``destroy()`` (``specs.py:268-283``): invoked when the partition
-  iterator is exhausted, with an ``atexit`` fallback for interpreter
-  teardown (reference reaps via ``actor_pool.py:220-298``).
+- ``destroy()`` (``specs.py:268-283``): invoked once at executor
+  process exit through ``atexit``, so per-process state outlives
+  partitions (reference reaps via ``actor_pool.py:220-298``).
 - ``Resources(cpus, gpus)`` (``resources.py:408-472``): carried on the
   stage; on a cluster this maps to a stage-level ResourceProfile /
   ``spark.task.resource.gpu.amount`` (see ``to_spark_confs``). The
@@ -41,6 +42,7 @@ no driver-side materialization anywhere (the 100 TB rule).
 from __future__ import annotations
 
 import atexit
+import fcntl
 import functools
 import inspect
 import os
@@ -112,7 +114,7 @@ class Stage:
     - ``setup()`` ran exactly once per process before any batch;
     - ``process_data(pdf)`` receives ``batch_size``-row frames (final
       partition remainder may be smaller);
-    - ``destroy()`` runs when the partition is exhausted.
+    - ``destroy()`` runs once, when the process exits.
     """
 
     batch_size: int | None = None  # None -> take Arrow batches as-is
@@ -148,70 +150,6 @@ _CACHE_LOCK = threading.Lock()
 _NODE_SETUP_WAIT_S = 300.0
 
 
-def _read_lock_pid(lock: str) -> int | None:
-    """The PID recorded in the lock file; None if missing/unreadable.
-
-    An unreadable lock (a foreign writer — our protocol always links
-    the PID in atomically) reads as None and is treated as not-alive:
-    waiters then treat a recorded failure as final rather than waiting
-    on a holder that may never finish."""
-    try:
-        with open(lock) as f:
-            return int(f.read().strip())
-    except (OSError, ValueError):
-        return None
-
-
-def _pid_alive(pid: int) -> bool:
-    """Signal-0 liveness probe.
-
-    EPERM means the process EXISTS but belongs to another uid — on a
-    shared host that holder is alive and must not have its lock stolen
-    (treating it as dead double-ran ``setup_on_node``).
-    """
-    try:
-        os.kill(pid, 0)
-        return True
-    except PermissionError:
-        return True
-    except OSError:
-        return False
-
-
-def _steal_stale_lock(lock: str, dead_pid: int | None) -> None:
-    """Unlink ``lock`` iff it still records ``dead_pid``, atomically
-    w.r.t. concurrent stealers.
-
-    The mutex (O_EXCL create) serializes the recheck+unlink so no
-    stealer can act on a read that predates another stealer's
-    re-acquisition. A mutex abandoned by a crashed stealer only guards
-    a microseconds-long section, so one older than 5s is broken — and
-    the caller's overall deadline bounds the pathological cases.
-    """
-    mutex = lock + ".steal"
-    try:
-        fd = os.open(mutex, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-    except FileExistsError:
-        try:
-            if time.time() - os.path.getmtime(mutex) > 5.0:
-                os.unlink(mutex)
-        except OSError:
-            pass
-        return  # another stealer is in the section; let the loop retry
-    try:
-        os.close(fd)
-        if _read_lock_pid(lock) == dead_pid:
-            try:
-                os.unlink(lock)
-            except FileNotFoundError:
-                pass
-    finally:
-        try:
-            os.unlink(mutex)
-        except OSError:
-            pass
-
-
 @functools.cache
 def _driver_scope() -> str:
     """This driver's run-id prefix, which names the directory that holds
@@ -228,93 +166,59 @@ def _driver_scope() -> str:
 
 
 def _node_setup_once(stage: Stage, run_id: str) -> None:
-    """Exactly-once-per-host ``setup_on_node`` via file lock election.
+    """Exactly-once-per-host ``setup_on_node``: the process holding an
+    exclusive ``flock`` on ``<marker>.lock`` runs it, the others wait
+    for the done marker.
 
     Reference elects one actor per node and others wait
-    (``actor_pool.py:1066-1074``, ``:1330-1388``).
+    (``actor_pool.py:1066-1074``, ``:1330-1388``). The kernel drops the
+    lock when its holder exits or dies, so a holder killed mid-setup
+    hands the election to the next waiter instead of wedging it.
 
-    Failure handling: if the elected process's ``setup_on_node`` raises,
-    it records the error in a failure marker and releases the lock, so
-    waiters (and task retries) fail fast with the original error instead
-    of spinning forever on a 'done' marker that will never appear.
-
-    Liveness handling (round-2 advisory): the lock file records the
-    holder's PID.
-
-    - A waiter that sees a failure marker raises only if no LIVE holder
-      currently owns the lock — a live holder is a re-election in
-      progress that is about to clear the stale marker, and raising on
-      it would fail a retry that was going to succeed (TOCTOU).
-    - A waiter that finds a DEAD holder (process crashed between
-      acquiring the lock and writing the done/failed marker) steals the
-      lock and re-runs the election itself instead of burning the full
-      timeout on a marker that can never appear (stale-lock deadlock).
+    A failed ``setup_on_node`` records its error in ``<marker>.failed``
+    before it releases the lock. A process that had to wait for the lock
+    raises that error, so waiters fail fast; one that finds the lock free
+    is a retry, and runs setup again.
     """
     marker = os.path.join(tempfile.gettempdir(), f"cxs_node_setup_{run_id}")
     failed = marker + ".failed"
-    lock = marker + ".lock"
     os.makedirs(os.path.dirname(marker), exist_ok=True)
-
-    def try_acquire() -> bool:
-        # Atomic acquire-with-PID: the PID is IN the file before the
-        # lock name exists (hard link), so no observer ever sees an
-        # empty lock from this protocol — stealers can't misjudge a
-        # just-elected live holder as dead.
-        tmp = f"{lock}.{os.getpid()}"
-        with open(tmp, "w") as f:
-            f.write(str(os.getpid()))
-        try:
-            os.link(tmp, lock)
-            return True
-        except FileExistsError:
-            return False
-        finally:
-            os.unlink(tmp)
-
     deadline = time.monotonic() + _NODE_SETUP_WAIT_S
-    while not try_acquire():
+    waited = False
+    # Never unlinked: a process still holding the old file open could
+    # lock it while another locks a new file of the same name. The
+    # per-driver directory (_driver_scope) removes it at driver exit.
+    with open(marker + ".lock", "a") as lock:
+        while True:
+            try:
+                fcntl.flock(lock, fcntl.LOCK_EX | fcntl.LOCK_NB)
+                break
+            except BlockingIOError:
+                pass
+            if os.path.exists(marker):
+                return
+            if time.monotonic() > deadline:
+                raise TimeoutError(
+                    f"setup_on_node not completed within {_NODE_SETUP_WAIT_S}s "
+                    f"(marker {marker}); the elected process is still running"
+                )
+            waited = True
+            time.sleep(0.05)
         if os.path.exists(marker):
             return
-        holder_pid = _read_lock_pid(lock)
-        holder_alive = holder_pid is not None and _pid_alive(holder_pid)
-        if os.path.exists(failed) and not holder_alive:
+        if waited and os.path.exists(failed):
             with open(failed) as f:
-                raise RuntimeError(
-                    f"setup_on_node failed on this host: {f.read()}"
-                )
-        if not holder_alive and not os.path.exists(marker):
-            # Holder died mid-setup: break its lock and re-elect. The
-            # recheck-then-unlink must be ATOMIC w.r.t. other stealers:
-            # without it, waiter B's recheck can pass just before
-            # stealer A unlinks and re-acquires, and B then removes A's
-            # FRESH lock — letting a third process elect concurrently
-            # with A (the exactly-once violation). A rename-capture
-            # steal has the mirror-image flaw (capturing a live
-            # holder's lock leaves the path vacant while it's "put
-            # back"), so instead the check-and-unlink section is
-            # serialized through a steal mutex: inside it, a stealer
-            # sees either the stale dead lock (steal it), a fresh live
-            # lock (back off), or no lock (race already resolved).
-            _steal_stale_lock(lock, holder_pid)
-            continue
-        if time.monotonic() > deadline:
-            raise TimeoutError(
-                f"setup_on_node not completed within {_NODE_SETUP_WAIT_S}s "
-                f"(marker {marker}); elected process may have died"
-            )
-        time.sleep(0.05)
-    try:
-        if os.path.exists(failed):
-            os.unlink(failed)  # re-election after a failure: clear it
-        stage.setup_on_node()
-        with open(marker, "w") as m:
-            m.write("done")
-    except Exception as e:
-        with open(failed, "w") as f:
-            f.write(repr(e))
-        # release the election so a retried task can attempt setup again
-        os.unlink(lock)
-        raise
+                raise RuntimeError(f"setup_on_node failed on this host: {f.read()}")
+        try:
+            if os.path.exists(failed):
+                os.unlink(failed)  # a retry after a failure: clear it
+            stage.setup_on_node()
+            with open(marker, "w") as m:
+                m.write("done")
+        except Exception as e:
+            with open(failed, "w") as f:
+                f.write(repr(e))
+            raise
 
 
 def _get_stage_instance(stage_factory, run_id: str) -> Stage:
@@ -358,29 +262,27 @@ def make_map_in_pandas_fn(stage_factory, run_id: str | None = None):
     run_id = run_id or os.path.join(_driver_scope(), uuid.uuid4().hex)
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        # No per-partition destroy: it would break the per-process model
+        # cache. destroy runs through atexit (registered in
+        # _get_stage_instance), the way the reference destroys on actor
+        # teardown.
         stage = _get_stage_instance(stage_factory, run_id)
-        try:
-            for pdf in _rebatch(batches, stage.batch_size):
-                out = None
-                last_err: Exception | None = None
-                for _ in range(max(1, stage.num_run_attempts)):
-                    try:
-                        out = stage.process_data(pdf)
-                        last_err = None
-                        break
-                    except Exception as e:  # retry per reference policy
-                        last_err = e
-                if last_err is not None:
-                    if stage.ignore_failures:
-                        continue  # drop the batch (reference ignore_failures)
-                    raise last_err
-                if out is not None and len(out) > 0:
-                    yield out
-        finally:
-            # Per-partition destroy would break the per-process model
-            # cache; rely on atexit (registered in _get_stage_instance)
-            # the way the reference destroys on actor teardown.
-            pass
+        for pdf in _rebatch(batches, stage.batch_size):
+            out = None
+            last_err: Exception | None = None
+            for _ in range(max(1, stage.num_run_attempts)):
+                try:
+                    out = stage.process_data(pdf)
+                    last_err = None
+                    break
+                except Exception as e:  # retry per reference policy
+                    last_err = e
+            if last_err is not None:
+                if stage.ignore_failures:
+                    continue  # drop the batch (reference ignore_failures)
+                raise last_err
+            if out is not None and len(out) > 0:
+                yield out
 
     return fn
 

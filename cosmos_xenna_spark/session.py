@@ -59,6 +59,13 @@ def _socket_dir() -> str:
     return path
 
 
+def _default_driver_memory() -> str:
+    """The smaller of 16g and half this host's physical memory: an
+    elastic heap the host cannot back grows until it swaps or is killed."""
+    half_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**21
+    return f"{min(16 * 1024, half_mb)}m"
+
+
 def get_spark(
     app_name: str = "cosmos_xenna_spark",
     master: str | None = None,
@@ -70,6 +77,8 @@ def get_spark(
     ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (or local[*]).
     ``shuffle_partitions`` defaults to the local core count — the right
     number for local runs; on a real cluster leave AQE to coalesce.
+    ``spark.driver.memory`` is ``$SPARK_DRIVER_MEMORY`` when set, else
+    the smaller of 16g and half the host's physical memory.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS")
     if master is None:
@@ -81,7 +90,10 @@ def get_spark(
         SparkSession.builder.appName(app_name)
         .master(master)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEMORY", _default_driver_memory()),
+        )
         .config("spark.ui.enabled", "false")
         # Console progress writes \r-laden lines to the terminal that
         # corrupt fixed-size log-tail captures (BENCH_r06 was recorded

@@ -272,11 +272,12 @@ def streaming_fuzzy_dedup_probe(
     — the streaming form of ``operators.dedup.incremental_fuzzy_dedup``
     (same hashes, same banding, same exact word-set verification).
 
-    Streaming constraints shape the plan: per-doc signatures use the
+    Streaming constraints shape the plan: stream-side signatures use the
     ZERO-aggregation row-local banding (``minhash_bands_rowlocal`` — a
     per-doc groupBy on a stream would need a watermark and delay
-    emission), the corpus side is a static bucket+wordset table
-    (precompute and persist it in production), and the verify is the
+    emission), the corpus side is a static bucket+wordset table built by
+    the batch ``lsh_band_buckets`` (identical buckets; precompute and
+    persist it in production), and the verify is the
     row-local ``array_intersect`` form — so the whole probe is
     stateless stream-static joins, no streaming aggregation at all
     except the final per-pair ``dropDuplicates`` (a pair colliding in
@@ -284,12 +285,15 @@ def streaming_fuzzy_dedup_probe(
     emitted PAIRS only (the duplicate sliver, not the stream); add a
     watermark upstream to bound it for unbounded runs.
     """
-    from cosmos_xenna_spark.operators.dedup import minhash_bands_rowlocal
+    from cosmos_xenna_spark.operators.dedup import (
+        lsh_band_buckets,
+        minhash_bands_rowlocal,
+    )
 
     stream_bands = minhash_bands_rowlocal(
         stream_docs, text_col, n_hashes, band_size, k
     )
-    corpus_bands = minhash_bands_rowlocal(corpus, text_col, n_hashes, band_size, k)
+    corpus_bands = lsh_band_buckets(corpus, text_col, n_hashes, band_size, k)
     corpus_side = corpus_bands.withColumnRenamed("doc_id", "dup_of").join(
         corpus.select(
             F.col("doc_id").alias("dup_of"),

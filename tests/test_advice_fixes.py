@@ -6,7 +6,7 @@ Round 1:
 - cluster_centroids must fail loudly on empty / ragged inputs
 
 Round 2 (fixed in round 4):
-- stale node-setup lock (holder died mid-setup) is stolen, not waited out
+- a node-setup holder that died mid-setup is replaced, not waited out
 - a live re-electing holder suppresses a stale failure marker (TOCTOU)
 - global_cumsum must not TypeError when a bucket sums to NULL
 - PII counts match the sequential redaction (no counting inside spans an
@@ -16,9 +16,14 @@ Round 2 (fixed in round 4):
 
 from __future__ import annotations
 
+import fcntl
 import os
+import signal
 import subprocess
 import sys
+import tempfile
+import time
+import types
 import uuid
 
 import pytest
@@ -28,7 +33,10 @@ from pyspark.sql import functions as F
 from cosmos_xenna_spark.operators.quality import redact_pii
 from cosmos_xenna_spark.operators.ranking import global_cumsum, global_row_number
 from cosmos_xenna_spark.operators.similarity import cluster_centroids
+from cosmos_xenna_spark.operators import stage as stage_mod
 from cosmos_xenna_spark.operators.stage import Stage, _node_setup_once
+
+_REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 class _FailingSetup(Stage):
@@ -47,42 +55,69 @@ class _OkSetup(Stage):
         return batch
 
 
-def test_node_setup_failure_records_marker_and_reelects(tmp_path):
-    run_id = uuid.uuid4().hex
-    import tempfile
+@pytest.fixture
+def node_marker(tmp_path, monkeypatch):
+    """A fresh run's node-setup marker path, with the system temp root
+    pointed at this test's own directory."""
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    return str(tmp_path / f"cxs_node_setup_{uuid.uuid4().hex}")
 
-    marker = os.path.join(tempfile.gettempdir(), f"cxs_node_setup_{run_id}")
+
+def _run_id(marker: str) -> str:
+    return os.path.basename(marker)[len("cxs_node_setup_"):]
+
+
+def _hold_lock(marker: str):
+    """Take the election lock through a second open file, as another
+    process would; closing the file releases it."""
+    holder = open(marker + ".lock", "a")
+    fcntl.flock(holder, fcntl.LOCK_EX | fcntl.LOCK_NB)
+    return holder
+
+
+def _on_first_poll(monkeypatch, action) -> None:
+    """Run ``action`` when the election first sleeps, i.e. once the
+    caller has seen the lock held and is waiting for it."""
+    done = []
+
+    def sleep(s):
+        if not done:
+            done.append(action())
+        time.sleep(s)
+
+    monkeypatch.setattr(
+        stage_mod, "time", types.SimpleNamespace(monotonic=time.monotonic, sleep=sleep)
+    )
+
+
+def test_node_setup_failure_records_marker_and_reelects(node_marker):
+    marker, run_id = node_marker, _run_id(node_marker)
     with pytest.raises(RuntimeError, match="boom"):
         _node_setup_once(_FailingSetup(), run_id)
     # failure marker recorded, lock released, no done marker
-    assert os.path.exists(marker + ".failed")
-    assert not os.path.exists(marker + ".lock")
+    with open(marker + ".failed") as f:
+        assert "boom" in f.read()
+    _hold_lock(marker).close()
     assert not os.path.exists(marker)
     # a retried task re-runs setup and clears the failure record
     _node_setup_once(_OkSetup(), run_id)
     assert os.path.exists(marker)
     assert not os.path.exists(marker + ".failed")
-    for suffix in ("", ".failed", ".lock"):
-        if os.path.exists(marker + suffix):
-            os.unlink(marker + suffix)
 
 
-def test_node_setup_waiter_sees_failure(tmp_path):
+def test_node_setup_waiter_sees_failure(node_marker, monkeypatch):
     """A process that lost the election must raise when the elected
     process recorded a failure, not spin forever."""
-    run_id = uuid.uuid4().hex
-    import tempfile
-
-    marker = os.path.join(tempfile.gettempdir(), f"cxs_node_setup_{run_id}")
-    # simulate: election lock held by someone, failure already recorded
-    with open(marker + ".lock", "w"):
-        pass
+    marker, run_id = node_marker, _run_id(node_marker)
+    holder = _hold_lock(marker)
     with open(marker + ".failed", "w") as f:
         f.write("RuntimeError('boom')")
+    # the holder finishes (lock released) while the waiter polls
+    _on_first_poll(monkeypatch, holder.close)
     with pytest.raises(RuntimeError, match="setup_on_node failed"):
         _node_setup_once(_OkSetup(), run_id)
-    for suffix in (".failed", ".lock"):
-        os.unlink(marker + suffix)
+    assert holder.closed  # it really waited for the holder
+    assert not os.path.exists(marker)
 
 
 def test_global_row_number_null_keys_rank_first(spark):
@@ -100,50 +135,118 @@ def test_global_row_number_null_keys_rank_first(spark):
     assert got == want
 
 
-def test_node_setup_stale_lock_is_stolen():
-    """Holder died between acquiring the lock and writing any marker:
-    a retried task must steal the lock and run setup itself instead of
-    burning the 300 s timeout."""
-    import tempfile
+_HOLD_LOCK_SCRIPT = """
+import fcntl, sys, time
+f = open(sys.argv[1], "a")
+fcntl.flock(f, fcntl.LOCK_EX)
+print("held", flush=True)
+time.sleep(600)
+"""
 
-    run_id = uuid.uuid4().hex
-    marker = os.path.join(tempfile.gettempdir(), f"cxs_node_setup_{run_id}")
-    # a real PID that is guaranteed dead: a finished child process
-    child = subprocess.run(
-        [sys.executable, "-c", "import os; print(os.getpid())"],
-        capture_output=True,
+
+def test_node_setup_stale_lock_is_stolen(node_marker, monkeypatch):
+    """Holder died between taking the lock and writing any marker: the
+    waiter must take over and run setup itself instead of burning the
+    whole timeout."""
+    marker, run_id = node_marker, _run_id(node_marker)
+    holder = subprocess.Popen(
+        [sys.executable, "-c", _HOLD_LOCK_SCRIPT, marker + ".lock"],
+        stdout=subprocess.PIPE,
         text=True,
-        check=True,
     )
-    dead_pid = child.stdout.strip()
-    with open(marker + ".lock", "w") as f:
-        f.write(dead_pid)
-    _node_setup_once(_OkSetup(), run_id)  # must not TimeoutError
+    try:
+        assert holder.stdout.readline() == "held\n"
+
+        def kill_holder():
+            holder.kill()
+            holder.wait(timeout=30)
+
+        _on_first_poll(monkeypatch, kill_holder)
+        monkeypatch.setattr(stage_mod, "_NODE_SETUP_WAIT_S", 60.0)
+        _node_setup_once(_OkSetup(), run_id)  # must not TimeoutError
+    finally:
+        holder.kill()
+        holder.wait(timeout=30)
+        holder.stdout.close()
+    assert holder.returncode == -signal.SIGKILL
     assert os.path.exists(marker)
-    for suffix in ("", ".failed", ".lock"):
-        if os.path.exists(marker + suffix):
-            os.unlink(marker + suffix)
 
 
-def test_node_setup_live_holder_suppresses_stale_failure(monkeypatch):
+def test_node_setup_live_holder_suppresses_stale_failure(node_marker, monkeypatch):
     """failure marker + lock held by a LIVE process = re-election in
     progress; the waiter must keep waiting (here: until the shortened
     timeout) instead of raising the stale failure (TOCTOU)."""
-    import tempfile
-
-    import cosmos_xenna_spark.operators.stage as stage_mod
-
-    run_id = uuid.uuid4().hex
-    marker = os.path.join(tempfile.gettempdir(), f"cxs_node_setup_{run_id}")
-    with open(marker + ".lock", "w") as f:
-        f.write(str(os.getpid()))  # ourselves: definitely alive
+    marker, run_id = node_marker, _run_id(node_marker)
+    holder = _hold_lock(marker)
     with open(marker + ".failed", "w") as f:
         f.write("RuntimeError('stale')")
     monkeypatch.setattr(stage_mod, "_NODE_SETUP_WAIT_S", 0.3)
-    with pytest.raises(TimeoutError):
-        _node_setup_once(_OkSetup(), run_id)
-    for suffix in (".failed", ".lock"):
-        os.unlink(marker + suffix)
+    try:
+        with pytest.raises(TimeoutError):
+            _node_setup_once(_OkSetup(), run_id)
+    finally:
+        holder.close()
+    assert os.path.exists(marker + ".failed")  # left for the holder
+
+
+_RACE_SCRIPT = """
+import os, sys, time
+
+from cosmos_xenna_spark.operators.stage import Stage, _node_setup_once
+
+run_id, log, go = sys.argv[1:4]
+
+
+class Slow(Stage):
+    def setup_on_node(self):
+        with open(log, "a") as f:
+            f.write(f"start {os.getpid()}\\n")
+        while not os.path.exists(go):
+            time.sleep(0.01)
+        with open(log, "a") as f:
+            f.write("done\\n")
+
+    def process_data(self, batch):
+        return batch
+
+
+_node_setup_once(Slow(), run_id)
+"""
+
+
+def test_node_setup_survives_sigkilled_holder_race(tmp_path):
+    """Five processes race for one host's election and the winner is
+    SIGKILLed inside setup_on_node: the kernel releases its lock, one
+    waiter re-runs setup to completion, and every survivor returns."""
+    run_id = uuid.uuid4().hex
+    log, go = tmp_path / "setup.log", tmp_path / "go"
+    procs = [
+        subprocess.Popen(
+            [sys.executable, "-c", _RACE_SCRIPT, run_id, str(log), str(go)],
+            cwd=_REPO,
+            env={**os.environ, "TMPDIR": str(tmp_path)},
+        )
+        for _ in range(5)
+    ]
+    try:
+        deadline = time.monotonic() + 120
+        while not (log.exists() and log.read_text().endswith("\n")):
+            assert time.monotonic() < deadline, "no process started setup"
+            time.sleep(0.01)
+        first = int(log.read_text().split()[1])
+        os.kill(first, signal.SIGKILL)
+        go.touch()
+        codes = {p.pid: p.wait(timeout=120) for p in procs}
+    finally:
+        for p in procs:
+            p.kill()
+            p.wait(timeout=30)
+    assert codes.pop(first) == -signal.SIGKILL
+    assert list(codes.values()) == [0] * 4
+    lines = log.read_text().splitlines()
+    assert [ln.split()[0] for ln in lines] == ["start", "start", "done"]
+    assert int(lines[1].split()[1]) != first
+    assert (tmp_path / f"cxs_node_setup_{run_id}").exists()
 
 
 def test_global_cumsum_null_values_no_typeerror(spark):
@@ -215,69 +318,6 @@ def test_cluster_centroids_ragged_raises(spark):
     )
     with pytest.raises(ValueError, match="ragged"):
         cluster_centroids(df)
-
-
-def test_pid_alive_treats_eperm_as_alive(monkeypatch):
-    """EPERM from kill(pid, 0) means the process EXISTS (foreign uid);
-    stealing its lock would double-run setup_on_node."""
-    from cosmos_xenna_spark.operators import stage as stage_mod
-
-    def fake_kill(pid, sig):
-        if pid == 111:
-            raise PermissionError(1, "Operation not permitted")
-        if pid == 222:
-            raise ProcessLookupError(3, "No such process")
-
-    monkeypatch.setattr(os, "kill", fake_kill)
-    assert stage_mod._pid_alive(111) is True
-    assert stage_mod._pid_alive(222) is False
-    assert stage_mod._pid_alive(os.getpid()) is True
-
-
-def test_steal_stale_lock_only_removes_dead_holders(tmp_path):
-    from cosmos_xenna_spark.operators.stage import _steal_stale_lock
-
-    lock = str(tmp_path / "x.lock")
-
-    # lock names the dead holder -> stolen
-    with open(lock, "w") as f:
-        f.write("99999")
-    _steal_stale_lock(lock, 99999)
-    assert not os.path.exists(lock)
-    assert not os.path.exists(lock + ".steal")  # mutex released
-
-    # lock was re-acquired by someone else (pid differs) -> untouched
-    with open(lock, "w") as f:
-        f.write(str(os.getpid()))
-    _steal_stale_lock(lock, 99999)
-    assert os.path.exists(lock)
-    os.unlink(lock)
-
-
-def test_steal_stale_lock_backs_off_while_mutex_held(tmp_path):
-    """A second stealer must NOT act while another is in the
-    check-and-unlink section — that interleaving is exactly the
-    double-elect race. An abandoned (old) mutex is broken."""
-    import time as _time
-
-    from cosmos_xenna_spark.operators.stage import _steal_stale_lock
-
-    lock = str(tmp_path / "y.lock")
-    mutex = lock + ".steal"
-    with open(lock, "w") as f:
-        f.write("99999")
-    with open(mutex, "w") as f:
-        f.write("")
-    _steal_stale_lock(lock, 99999)
-    assert os.path.exists(lock)  # backed off, fresh mutex respected
-    # age the mutex past the abandonment TTL -> broken, lock still
-    # untouched on THIS call (the steal happens on the next retry)
-    old = _time.time() - 10
-    os.utime(mutex, (old, old))
-    _steal_stale_lock(lock, 99999)
-    assert not os.path.exists(mutex)
-    _steal_stale_lock(lock, 99999)
-    assert not os.path.exists(lock)
 
 
 def test_bm25_quote_and_regex_terms_score_zero(spark):

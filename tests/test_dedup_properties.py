@@ -7,7 +7,10 @@ from __future__ import annotations
 import random
 
 
+from cosmos_xenna_spark.catalog import load_table
 from cosmos_xenna_spark.operators.dedup import (
+    lsh_band_buckets,
+    minhash_bands_rowlocal,
     minhash_candidate_pairs,
     ngram_jaccard_pairs,
     simhash,
@@ -49,6 +52,21 @@ def test_minhash_lsh_precision_on_random_docs(spark):
     docs = spark.createDataFrame(rows, "doc_id long, text string, source string")
     pairs = minhash_candidate_pairs(docs, n_hashes=16, band_size=4).count()
     assert pairs <= 2, f"too many false-positive candidates: {pairs}"
+
+
+def test_rowlocal_bands_equal_batch_bands(spark, sf_dir):
+    """The zero-aggregation banding returns exactly the batch operator's
+    (doc_id, band, bucket) rows, including for docs too short to shingle
+    and NULL text (no rows from either)."""
+    edge = spark.createDataFrame(
+        [(-1, "two words"), (-2, ""), (-3, None), (-4, "a b a b a b")],
+        "doc_id long, text string",
+    )
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text").union(edge)
+    got = sorted(minhash_bands_rowlocal(docs).collect())
+    want = sorted(lsh_band_buckets(docs).collect())
+    assert len(want) > 0
+    assert got == want
 
 
 def test_jaccard_pairs_match_planted(spark):

@@ -12,6 +12,8 @@ import subprocess
 import sys
 import textwrap
 
+from cosmos_xenna_spark import session
+
 _REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
@@ -65,3 +67,16 @@ def test_local_session_uses_unix_sockets_and_rename_based_checkpoints(spark, tmp
         spark._jsparkSession.sessionState().newHadoopConf(),
     )
     assert manager.getClass().getSimpleName() == "FileSystemBasedCheckpointFileManager"
+
+
+def test_default_driver_heap_is_at_most_half_the_host(spark, monkeypatch):
+    want = os.environ.get("SPARK_DRIVER_MEMORY", session._default_driver_memory())
+    assert spark.sparkContext.getConf().get("spark.driver.memory") == want
+
+    def host(gib):
+        pages = {"SC_PAGE_SIZE": 4096, "SC_PHYS_PAGES": gib * 2**18}
+        monkeypatch.setattr(os, "sysconf", pages.__getitem__)
+        return session._default_driver_memory()
+
+    assert host(15) == "7680m"
+    assert host(64) == "16384m"
